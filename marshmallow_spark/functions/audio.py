@@ -12,13 +12,39 @@ offset arithmetic (``np.repeat`` + ``np.add.reduceat``) — zero per-row
 Python in the hot path. Codec tables are the public ITU-T G.711
 mu-law/A-law companding laws, built once per executor as 256-entry
 decode LUTs.
+
+This module also holds the decode scaffold every Arrow audio kernel
+(``functions/audio*.py``) is built on:
+
+- ``clip_batch(batch)`` unpacks a clips RecordBatch once: payload
+  offsets/data/validity, ``byte_len``, ``sr``, per-codec masks, sample
+  ``width`` and ``n_avail`` (whole samples in the payload; 0 for a
+  NULL payload or a NULL/unknown codec).
+- ``decoded_chunks(cb, rows, *, max_samples=None, chunk_rows,
+  buf_name)`` decodes exactly the rows set in the boolean mask ``rows``
+  (rows of a NULL/unknown codec are never decoded), codec by codec in
+  ``KNOWN_CODECS`` order and at most ``chunk_rows`` rows at a time (each
+  kernel passes its own module constant: 512, 1024 or 2048). It yields
+  ``(codec, sel, dec, lens)``: ``sel`` the chunk's row indices in
+  ascending order, ``lens`` the samples decoded per row and ``dec``
+  their float32 samples in [-1, 1], concatenated. A row decodes its
+  whole usable prefix (``n_avail`` samples: an odd trailing pcm16 byte
+  is dropped) or, with ``max_samples``, only its head
+  (``min(n_avail, max_samples)``). ``dec`` and the gather buffer
+  ``buf_name`` live in the per-worker workspace and are valid until the
+  next chunk.
+- ``map_clips(df, cols, kernel, schema, passthrough=())`` is the single
+  ``mapInArrow`` entry point; ``passthrough`` columns are carried from
+  each input batch onto its same-row-count output batch.
+- ``masked_array(vals, valid, type)`` assembles a NULL-masked output
+  column from numpy in one call.
 """
 
 from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -91,10 +117,9 @@ SAMPLE_WIDTH = {"pcm16": 2, "ulaw": 1, "alaw": 1}
 KNOWN_CODECS = tuple(SAMPLE_WIDTH)
 
 
-def decode_payload_batch(buf: bytes, offsets: np.ndarray, codec: str) -> np.ndarray:
+def decode_payload_batch(buf: np.ndarray, codec: str) -> np.ndarray:
     """Decode one codec subgroup's concatenated payload to float32 PCM
-    in [-1, 1]. ``offsets`` are byte offsets into ``buf`` (unused here —
-    decoding is positionless; kept for signature symmetry)."""
+    in [-1, 1] (a workspace view, valid until the next decode)."""
     if codec == "pcm16":
         arr = np.frombuffer(buf, dtype="<i2")
     else:
@@ -116,13 +141,6 @@ NOISE_AMPLITUDE = 0.01
 
 def n_samples(sr_hz: np.ndarray, dur_ms: np.ndarray) -> np.ndarray:
     return (sr_hz.astype(np.int64) * dur_ms.astype(np.int64)) // 1000
-
-
-def _pseudo_noise(t: np.ndarray, idx_rep: np.ndarray) -> np.ndarray:
-    """Deterministic, vectorized pseudo-noise (hash-sine construction —
-    reproducible on any platform without per-row RNG objects)."""
-    x = np.sin(t * 12.9898 + idx_rep * 78.233) * 43758.5453
-    return (x - np.floor(x)) - 0.5
 
 
 class _Workspace:
@@ -210,9 +228,7 @@ def reference_pcm_flat(
     total = int(lens.sum())
     if total == 0:
         return np.empty(0, dtype=np.float32), lens
-    starts = np.zeros(len(lens), dtype=np.int64)
-    if len(lens) > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
+    starts = row_starts(lens)
 
     two_pi_32 = np.float32(2.0 * np.pi)
     inv_two_pi = 1.0 / (2.0 * np.pi)
@@ -317,170 +333,15 @@ def reference_transcripts(idx: np.ndarray) -> pd.Series:
 
 
 # --------------------------------------------------------------------------
-# The invariant checker: mapInPandas over (clip_id, bytes, sr_hz, dur_ms,
-# codec, transcript) -> violation rows
-# --------------------------------------------------------------------------
-
-SNR_THRESHOLD_DB = 30.0
-
-INVARIANT_OUT_SCHEMA = (
-    "clip_id string, field string, message string, snr_db double"
-)
-
-#: output of the fused invariant+quality kernel (check_invariant_arrow_batch
-#: with quality=): invariant rows carry (field, message, snr_db); quality
-#: rows carry the raw metrics of clips that breach at least one threshold
-#: and are rendered to violation messages JVM-side (audio_quality
-#: fused_audio_violations) so the text is byte-identical to the
-#: standalone quality gate's format_string output.
-FUSED_OUT_SCHEMA = (
-    "clip_id string, field string, message string, snr_db double, "
-    "check string, rms_dbfs double, clipping_ratio double, dc_offset double"
-)
-
-
-def clip_index_from_id(clip_id: pd.Series) -> np.ndarray:
-    """clip-%012d -> int index (vectorized pandas str ops)."""
-    digits = clip_id.str.extract(r"(\d+)$", expand=False)
-    return pd.to_numeric(digits, errors="coerce").fillna(-1).astype(np.int64).to_numpy()
-
-
-def _snr_db(ref_flat, dec_flat, lens) -> np.ndarray:
-    """Per-row SNR via reduceat over the concatenated sample arrays."""
-    starts = np.zeros(len(lens), dtype=np.int64)
-    if len(lens) > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
-    n = len(ref_flat)
-    nz = lens > 0
-    # trailing zero-length rows put their start at n — out of bounds
-    # for reduceat; reduce over the nonzero rows and scatter back
-    starts_nz = starts[nz]
-
-    def scatter(vals):
-        out = np.zeros(len(lens))
-        out[nz] = vals
-        return out
-
-    # square into a reusable f64 buffer (accumulation stays float64 for
-    # the reduceat sums); err lives in a f32 workspace view
-    p = _WS.f64("t", n)
-    np.multiply(ref_flat, ref_flat, out=p)
-    sig_pow = (
-        scatter(np.add.reduceat(p, starts_nz))
-        if n and starts_nz.size
-        else np.zeros(len(lens))
-    )
-    err = _WS.f32("err", n)
-    np.subtract(ref_flat, dec_flat, out=err)
-    np.multiply(err, err, out=p)
-    err_pow = (
-        scatter(np.add.reduceat(p, starts_nz))
-        if n and starts_nz.size
-        else np.zeros(len(lens))
-    )
-    with np.errstate(divide="ignore", invalid="ignore"):
-        snr = 10.0 * np.log10(sig_pow / np.maximum(err_pow, 1e-30))
-    return np.where(err_pow <= 1e-30, np.inf, snr)
-
-
-def check_invariant_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One Arrow batch -> violation rows (clip_id, field, message, snr_db).
-
-    Checks, in skip-on-structural-error order (parity with
-    skip_on_field_errors, /root/reference/src/marshmallow/schema.py:1162):
-      1. codec known (else "Must be one of: ...")
-      2. payload length == n_samples * width ("Truncated audio payload ...")
-      3. decoded PCM SNR >= 30 dB vs reference ("Audio does not match ...")
-      4. transcript equality vs deterministic reference
-    """
-    out_id, out_field, out_msg, out_snr = [], [], [], []
-    idx = clip_index_from_id(pdf["clip_id"])
-    sr = pdf["sr_hz"].fillna(0).to_numpy(dtype=np.int64)
-    dur = pdf["dur_ms"].fillna(0).to_numpy(dtype=np.int64)
-    codec = pdf["codec"].fillna("").to_numpy(dtype=object)
-    payload = pdf["bytes"].to_numpy(dtype=object)
-    byte_len = np.fromiter(
-        (len(b) if b is not None else -1 for b in payload), dtype=np.int64, count=len(payload)
-    )
-
-    codec_known = np.isin(codec.astype(str), KNOWN_CODECS)
-    structural_ok = codec_known & (sr > 0) & (dur > 0) & (byte_len >= 0)
-
-    choices_text = ", ".join(KNOWN_CODECS)
-    for i in np.flatnonzero(~codec_known):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("codec")
-        out_msg.append(f"Must be one of: {choices_text}.")
-        out_snr.append(None)
-
-    width = np.array([SAMPLE_WIDTH.get(str(c), 0) for c in codec], dtype=np.int64)
-    expected_bytes = n_samples(sr, dur) * width
-    bad_len = structural_ok & (byte_len != expected_bytes)
-    for i in np.flatnonzero(bad_len):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("bytes")
-        out_msg.append(
-            f"Truncated audio payload: expected {int(expected_bytes[i])} bytes, got {int(byte_len[i])}."
-        )
-        out_snr.append(None)
-
-    decodable = structural_ok & ~bad_len
-    # decode + SNR per codec subgroup (<=3 groups; batch-level numpy only)
-    for c in KNOWN_CODECS:
-        sel = np.flatnonzero(decodable & (codec == c))
-        if len(sel) == 0:
-            continue
-        buf = b"".join(payload[i] for i in sel)
-        dec = decode_payload_batch(buf, None, c)
-        ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
-        snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
-        bad = np.flatnonzero(snr < SNR_THRESHOLD_DB)
-        for j in bad:
-            i = sel[j]
-            out_id.append(pdf["clip_id"].iat[i])
-            out_field.append("bytes")
-            out_msg.append(
-                f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
-            )
-            out_snr.append(float(snr[j]))
-
-    # transcript equality vs deterministic reference
-    expected_tx = reference_transcripts(idx)
-    tx = pdf["transcript"]
-    mismatch = tx.notna().to_numpy() & (tx.fillna("") != expected_tx).to_numpy() & (idx >= 0)
-    for i in np.flatnonzero(mismatch):
-        out_id.append(pdf["clip_id"].iat[i])
-        out_field.append("transcript")
-        out_msg.append("Transcript does not match reference.")
-        out_snr.append(None)
-
-    return pd.DataFrame(
-        {"clip_id": out_id, "field": out_field, "message": out_msg, "snr_db": out_snr}
-    )
-
-
-# --------------------------------------------------------------------------
-# Arrow-native invariant checker: mapInArrow, zero-copy payload access
+# The Arrow decode scaffold shared by every audio kernel
 # --------------------------------------------------------------------------
 #
-# The pandas path above materializes one Python ``bytes`` object per row
-# plus a ``b"".join`` memcpy before the kernel sees a single sample. The
-# Arrow path reads the BinaryArray's flat data buffer + offsets directly
-# (zero-copy via np.frombuffer), parses clip indices by reshaping the
-# fixed-width id strings, and compares transcripts against the periodic
-# LUT with a padded 2D byte gather — no per-row Python objects anywhere
-# on the clean path (only flagged rows pay per-row string extraction).
+# Payloads are read from the BinaryArray's flat data buffer + offsets
+# directly (zero-copy via np.frombuffer): no per-row Python ``bytes``
+# objects and no ``b"".join`` memcpy before the kernel sees a sample.
 
-#: transcript LUT flattened to bytes for vectorized comparison (ASCII,
-#: so utf8-byte equality == string equality)
-_TX_ENC = [t.encode() for t in _TRANSCRIPT_LUT]
-_TX_LEN = np.array([len(b) for b in _TX_ENC], dtype=np.int64)
-_TX_OFF = np.zeros(_TRANSCRIPT_PERIOD + 1, dtype=np.int64)
-np.cumsum(_TX_LEN, out=_TX_OFF[1:])
-_TX_FLAT = np.frombuffer(b"".join(_TX_ENC), dtype=np.uint8)
-
-_ID_PREFIX = np.frombuffer(b"clip-", dtype=np.uint8)
-_ID_POWERS = 10 ** np.arange(11, -1, -1, dtype=np.int64)
+#: the clip columns every decode kernel reads
+CLIP_COLS = ("clip_id", "bytes", "sr_hz", "codec")
 
 
 def _varlen_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -547,6 +408,205 @@ def _np_int(arrow_ints) -> np.ndarray:
     return out.astype(np.int64)
 
 
+class ClipBatch(NamedTuple):
+    """One Arrow batch of clips, unpacked once (see :func:`clip_batch`)."""
+
+    col: dict  # column name -> Arrow array
+    n: int
+    off: np.ndarray  # payload byte offsets (int64, n + 1)
+    data: np.ndarray  # payload flat uint8 buffer
+    valid: np.ndarray  # payload is non-NULL
+    byte_len: np.ndarray  # payload bytes, 0 for NULL
+    sr: np.ndarray  # sr_hz, 0 for NULL
+    is_codec: dict  # codec -> row mask, in KNOWN_CODECS order
+    width: np.ndarray  # bytes per sample, 0 for a NULL/unknown codec
+    n_avail: np.ndarray  # whole samples in the payload, 0 if undecodable
+
+
+def clip_batch(batch) -> ClipBatch:
+    """Unpack a clips RecordBatch (``bytes``, ``codec``, ``sr_hz`` and
+    any other columns) into numpy views and per-codec masks."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+    n = batch.num_rows
+    b_arr = col["bytes"]
+    valid = _np_bool(pc.is_valid(b_arr))
+    off, data = _varlen_buffers(b_arr)
+    byte_len = np.where(valid, np.diff(off), 0).astype(np.int64)
+    codec_arr = col["codec"]
+    is_codec = {
+        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
+        for c in KNOWN_CODECS
+    }
+    width = np.zeros(n, dtype=np.int64)
+    for c, m in is_codec.items():
+        width[m] = SAMPLE_WIDTH[c]
+    n_avail = np.where(width > 0, byte_len // np.maximum(width, 1), 0)
+    return ClipBatch(
+        col, n, off, data, valid, byte_len, _np_int(col["sr_hz"]),
+        is_codec, width, n_avail,
+    )
+
+
+def row_starts(lens: np.ndarray) -> np.ndarray:
+    """Start of each row's run in a buffer of concatenated ``lens``-long runs."""
+    starts = np.zeros(len(lens), dtype=np.int64)
+    if len(lens) > 1:
+        np.cumsum(lens[:-1], out=starts[1:])
+    return starts
+
+
+def decoded_chunks(
+    cb: ClipBatch,
+    rows: np.ndarray,
+    *,
+    max_samples: int | None = None,
+    chunk_rows: int,
+    buf_name: str,
+):
+    """Decode the ``rows`` (bool mask) of ``cb`` codec by codec, at most
+    ``chunk_rows`` rows at a time; yields ``(codec, sel, dec, lens)``
+    (see the module docstring for the contract)."""
+    for c, is_c in cb.is_codec.items():
+        w = SAMPLE_WIDTH[c]
+        sel_all = np.flatnonzero(rows & is_c)
+        for lo in range(0, len(sel_all), chunk_rows):
+            sel = sel_all[lo : lo + chunk_rows]
+            lens = cb.n_avail[sel]
+            if max_samples is not None:
+                lens = np.minimum(lens, max_samples)
+            buf = _gather_bytes(cb.data, cb.off[sel], lens * w, name=buf_name)
+            yield c, sel, decode_payload_batch(buf, c), lens
+
+
+def masked_array(vals, valid, type=None):
+    """Arrow array of ``vals`` (numpy) with NULL where ``valid`` is
+    False, built in one call (float64 unless ``type`` says otherwise)."""
+    import pyarrow as pa
+
+    type = type or pa.float64()
+    return pa.array(
+        np.ascontiguousarray(vals, dtype=type.to_pandas_dtype()),
+        type=type,
+        mask=~np.asarray(valid, dtype=bool),
+    )
+
+
+def map_clips(df, cols, kernel, schema: str, passthrough=()):
+    """The one ``mapInArrow`` entry point of the audio kernels: prunes
+    ``df`` to ``cols`` (names or Columns) plus ``passthrough``, runs
+    ``kernel`` (RecordBatch -> RecordBatch or None) on every batch, and
+    appends the ``passthrough`` input columns to each output batch
+    (same-row-count kernels only) with their input types."""
+    import pyarrow as pa
+
+    pruned = df.select(*cols, *passthrough)
+    if passthrough:
+        schema += "".join(
+            f", `{f.name}` {f.dataType.simpleString()}"
+            for f in pruned.schema.fields[len(cols) :]
+        )
+
+    def run(batches):
+        for batch in batches:
+            out = kernel(batch)
+            if out is None:
+                continue
+            if passthrough:
+                out = pa.RecordBatch.from_arrays(
+                    out.columns + [batch.column(p) for p in passthrough],
+                    names=out.schema.names + list(passthrough),
+                )
+            yield out
+
+    return pruned.mapInArrow(run, schema=schema)
+
+
+# --------------------------------------------------------------------------
+# The invariant checker: mapInArrow over (clip_id, bytes, sr_hz, dur_ms,
+# codec, transcript) -> violation rows
+# --------------------------------------------------------------------------
+
+SNR_THRESHOLD_DB = 30.0
+
+INVARIANT_COLS = ("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
+
+INVARIANT_OUT_SCHEMA = (
+    "clip_id string, field string, message string, snr_db double"
+)
+
+#: output of the fused invariant+quality kernel (check_invariant_arrow_batch
+#: with quality=): invariant rows carry (field, message, snr_db); quality
+#: rows carry the raw metrics of clips that breach at least one threshold
+#: and are rendered to violation messages JVM-side (audio_quality
+#: fused_audio_violations) so the text is byte-identical to the
+#: standalone quality gate's format_string output.
+FUSED_OUT_SCHEMA = (
+    "clip_id string, field string, message string, snr_db double, "
+    "check string, rms_dbfs double, clipping_ratio double, dc_offset double"
+)
+
+#: Rows per numpy working set inside the UDF. Arrow hands us batches of
+#: spark.sql.execution.arrow.maxRecordsPerBatch (10k) rows; at ~4k
+#: samples/clip that is ~40M samples and reference_pcm_flat's float64
+#: temporaries hit ~2-3 GB per worker — 32 workers then fight the page
+#: allocator and the stage runs SLOWER at higher parallelism (measured
+#: 26s@8w -> 70s@32w on 600k clips). Chunking to 1024 rows bounds the
+#: working set to ~100 MB/worker and restores near-linear scaling; the
+#: numpy calls stay batch-vectorized.
+UDF_CHUNK_ROWS = 1024
+
+
+def _snr_db(ref_flat, dec_flat, lens) -> np.ndarray:
+    """Per-row SNR via reduceat over the concatenated sample arrays."""
+    starts = row_starts(lens)
+    n = len(ref_flat)
+    nz = lens > 0
+    # trailing zero-length rows put their start at n — out of bounds
+    # for reduceat; reduce over the nonzero rows and scatter back
+    starts_nz = starts[nz]
+
+    def scatter(vals):
+        out = np.zeros(len(lens))
+        out[nz] = vals
+        return out
+
+    # square into a reusable f64 buffer (accumulation stays float64 for
+    # the reduceat sums); err lives in a f32 workspace view
+    p = _WS.f64("t", n)
+    np.multiply(ref_flat, ref_flat, out=p)
+    sig_pow = (
+        scatter(np.add.reduceat(p, starts_nz))
+        if n and starts_nz.size
+        else np.zeros(len(lens))
+    )
+    err = _WS.f32("err", n)
+    np.subtract(ref_flat, dec_flat, out=err)
+    np.multiply(err, err, out=p)
+    err_pow = (
+        scatter(np.add.reduceat(p, starts_nz))
+        if n and starts_nz.size
+        else np.zeros(len(lens))
+    )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        snr = 10.0 * np.log10(sig_pow / np.maximum(err_pow, 1e-30))
+    return np.where(err_pow <= 1e-30, np.inf, snr)
+
+
+#: transcript LUT flattened to bytes for vectorized comparison (ASCII,
+#: so utf8-byte equality == string equality)
+_TX_ENC = [t.encode() for t in _TRANSCRIPT_LUT]
+_TX_LEN = np.array([len(b) for b in _TX_ENC], dtype=np.int64)
+_TX_OFF = np.zeros(_TRANSCRIPT_PERIOD + 1, dtype=np.int64)
+np.cumsum(_TX_LEN, out=_TX_OFF[1:])
+_TX_FLAT = np.frombuffer(b"".join(_TX_ENC), dtype=np.uint8)
+
+_ID_PREFIX = np.frombuffer(b"clip-", dtype=np.uint8)
+_ID_POWERS = 10 ** np.arange(11, -1, -1, dtype=np.int64)
+
+
 def _clip_indices_arrow(id_off: np.ndarray, id_data: np.ndarray, valid: np.ndarray) -> np.ndarray:
     """clip-%012d -> int64 index; -1 for null/malformed. Fast path:
     when every id is the canonical 17-byte form, one reshape + digit
@@ -602,9 +662,7 @@ def _gate_stats(x: np.ndarray, lens: np.ndarray, clip_threshold: np.float32):
     the fused quality gate needs (no peak / zero-crossings). Same
     accumulation discipline: reduceat with float64 accumulation, no
     float64 copy of the samples."""
-    starts = np.zeros(len(lens), dtype=np.int64)
-    if len(lens) > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
+    starts = row_starts(lens)
     if x.shape[0] == 0:
         z = np.zeros(len(lens))
         return z, z.copy(), z.copy()
@@ -634,13 +692,20 @@ def _gate_stats(x: np.ndarray, lens: np.ndarray, clip_threshold: np.float32):
     return s, ss, clipped
 
 
-def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | None = None):
+
+
+def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
     """One Arrow RecordBatch -> violation RecordBatch (or None).
 
-    Same checks and messages as check_invariant_batch; payloads are
-    consumed straight from the Arrow flat buffer (views + one
-    concatenate per codec subgroup), chunked so the reference-PCM
-    workspace stays cache-friendly (see UDF_CHUNK_ROWS).
+    Checks, in skip-on-structural-error order (parity with
+    marshmallow's skip_on_field_errors, src/marshmallow/schema.py):
+      1. codec known (else "Must be one of: ...")
+      2. payload length == n_samples * width ("Truncated audio payload ...")
+      3. decoded PCM SNR >= 30 dB vs reference ("Audio does not match ...")
+      4. transcript equality vs deterministic reference
+    Clip indices are parsed by reshaping the fixed-width id strings and
+    transcripts are compared against the periodic LUT with a padded 2D
+    byte gather — only flagged rows pay per-row string extraction.
 
     ``quality`` fuses the signal-quality gate into the SAME decode
     pass (keys: min_rms_dbfs / max_clipping_ratio / max_abs_dc_offset /
@@ -658,35 +723,21 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or UDF_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    id_arr, b_arr = col["clip_id"], col["bytes"]
+    cb = clip_batch(batch)
+    n, col, sr = cb.n, cb.col, cb.sr
+    id_arr = col["clip_id"]
     id_valid = _np_bool(pc.is_valid(id_arr))
     id_off, id_data = _varlen_buffers(id_arr)
     idx = _clip_indices_arrow(id_off, id_data, id_valid)
-    sr = _np_int(col["sr_hz"])
     dur = _np_int(col["dur_ms"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), -1)
 
     if "_inv_eligible" in col:
         elig = _np_bool(pc.fill_null(col["_inv_eligible"], False))
     else:
         elig = np.ones(n, dtype=bool)
 
-    codec_arr = col["codec"]
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
-    codec_known = np.zeros(n, dtype=bool)
-    width = np.zeros(n, dtype=np.int64)
-    for c, m in is_codec.items():
-        codec_known |= m
-        width[m] = SAMPLE_WIDTH[c]
-    structural_ok = elig & codec_known & (sr > 0) & (dur > 0) & (byte_len >= 0)
+    codec_known = cb.width > 0
+    structural_ok = elig & codec_known & (sr > 0) & (dur > 0) & cb.valid
 
     out_id: list[str] = []
     out_field: list[str] = []
@@ -700,13 +751,13 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
         out_msg.append(f"Must be one of: {choices_text}.")
         out_snr.append(None)
 
-    expected_bytes = n_samples(sr, dur) * width
-    bad_len = structural_ok & (byte_len != expected_bytes)
+    expected_bytes = n_samples(sr, dur) * cb.width
+    bad_len = structural_ok & (cb.byte_len != expected_bytes)
     for i in np.flatnonzero(bad_len):
         out_id.append(_id_at(i, id_off, id_data))
         out_field.append("bytes")
         out_msg.append(
-            f"Truncated audio payload: expected {int(expected_bytes[i])} bytes, got {int(byte_len[i])}."
+            f"Truncated audio payload: expected {int(expected_bytes[i])} bytes, got {int(cb.byte_len[i])}."
         )
         out_snr.append(None)
 
@@ -719,64 +770,46 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
         clip_threshold = np.float32(quality["clip_threshold"])
 
     decodable = structural_ok & ~bad_len
-    for c in KNOWN_CODECS:
-        sel_all = np.flatnonzero(decodable & is_codec[c])
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], byte_len[sel])
-                if len(sel)
-                else np.empty(0, np.uint8)
+    for _c, sel, dec, _ in decoded_chunks(
+        cb, decodable, chunk_rows=UDF_CHUNK_ROWS, buf_name="gather_buf"
+    ):
+        ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
+        if quality is not None:
+            # the fused gate reuses THIS decode — the whole point:
+            # bytes are scanned and decoded once for both checks
+            s_, ss_, cl_ = _gate_stats(dec[: len(ref_flat)], lens, clip_threshold)
+            q_n[sel] = lens
+            q_s[sel] = s_
+            q_ss[sel] = ss_
+            q_clip[sel] = cl_
+            q_measured[sel] = lens > 0
+        snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
+        for j in np.flatnonzero(snr < SNR_THRESHOLD_DB):
+            i = sel[j]
+            out_id.append(_id_at(i, id_off, id_data))
+            out_field.append("bytes")
+            out_msg.append(
+                f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
             )
-            dec = decode_payload_batch(buf, None, c)
-            ref_flat, lens = reference_pcm_flat(idx[sel], sr[sel], dur[sel])
-            if quality is not None:
-                # the fused gate reuses THIS decode — the whole point:
-                # bytes are scanned and decoded once for both checks
-                s_, ss_, cl_ = _gate_stats(
-                    dec[: len(ref_flat)], lens, clip_threshold
-                )
-                q_n[sel] = lens
-                q_s[sel] = s_
-                q_ss[sel] = ss_
-                q_clip[sel] = cl_
-                q_measured[sel] = lens > 0
-            snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
-            for j in np.flatnonzero(snr < SNR_THRESHOLD_DB):
-                i = sel[j]
-                out_id.append(_id_at(i, id_off, id_data))
-                out_field.append("bytes")
-                out_msg.append(
-                    f"Audio does not match reference: SNR {snr[j]:.1f} dB < {SNR_THRESHOLD_DB:.0f} dB."
-                )
-                out_snr.append(float(snr[j]))
+            out_snr.append(float(snr[j]))
 
     if quality is not None:
         # quality-only rows the invariant never decodes (truncated
         # payloads, ineligible rows): usable-prefix decode, matching
         # standalone audio_quality_metrics semantics. Violation-rate
         # sized in practice — the clean-path common set decoded above.
-        for c in KNOWN_CODECS:
-            w = SAMPLE_WIDTH[c]
-            usable = np.where(byte_len > 0, (byte_len // w) * w, 0)
-            extra_all = np.flatnonzero(
-                is_codec[c] & b_valid & (usable > 0) & ~decodable
-            )
-            for lo in range(0, len(extra_all), chunk_rows):
-                sel = extra_all[lo : lo + chunk_rows]
-                buf = (
-                    _gather_bytes(b_data, b_off[sel], usable[sel])
-                    if len(sel)
-                    else np.empty(0, np.uint8)
-                )
-                dec = decode_payload_batch(buf, None, c)
-                lens = usable[sel] // w
-                s_, ss_, cl_ = _gate_stats(dec, lens, clip_threshold)
-                q_n[sel] = lens
-                q_s[sel] = s_
-                q_ss[sel] = ss_
-                q_clip[sel] = cl_
-                q_measured[sel] = True
+        for _c, sel, dec, lens in decoded_chunks(
+            cb,
+            (cb.n_avail > 0) & ~decodable,
+            chunk_rows=UDF_CHUNK_ROWS,
+            buf_name="gather_buf",
+        ):
+            s_, ss_, cl_ = _gate_stats(dec, lens, clip_threshold)
+            q_n[sel] = lens
+            q_s[sel] = s_
+            q_ss[sel] = ss_
+            q_clip[sel] = cl_
+            q_measured[sel] = True
 
     t_arr = col["transcript"]
     t_valid = _np_bool(pc.is_valid(t_arr))
@@ -854,56 +887,17 @@ def check_invariant_arrow_batch(batch, *, chunk_rows: int = 0, quality: dict | N
     )
 
 
-#: Rows per numpy working set inside the UDF. Arrow hands us batches of
-#: spark.sql.execution.arrow.maxRecordsPerBatch (10k) rows; at ~4k
-#: samples/clip that is ~40M samples and reference_pcm_flat's float64
-#: temporaries hit ~2-3 GB per worker — 32 workers then fight the page
-#: allocator and the stage runs SLOWER at higher parallelism (measured
-#: 26s@8w -> 70s@32w on 600k clips). Chunking to 1024 rows bounds the
-#: working set to ~100 MB/worker and restores near-linear scaling; the
-#: numpy calls stay batch-vectorized.
-UDF_CHUNK_ROWS = 1024
-
-
-def audio_invariant_violations(
-    df, *, chunk_rows: int = UDF_CHUNK_ROWS, engine: str = "arrow"
-):
-    """DataFrame-level entry point.
-
-    ``engine="arrow"`` (default) runs mapInArrow with zero-copy payload
+def audio_invariant_violations(df):
+    """DataFrame-level entry point: violation rows (clip_id, field,
+    message, snr_db) from one mapInArrow pass with zero-copy payload
     access — no per-row bytes objects, no join memcpy on the input
-    side. ``engine="pandas"`` keeps the original mapInPandas kernel
-    (same checks/messages; retained for parity tests and as a
-    fallback). Measured end-to-end at local[8] over 600k clips the two
-    are within noise of each other (6.3-6.4s) — the decode/SNR kernel
-    dominates at this payload size — so the choice is about keeping the
-    hot path free of per-row Python object churn, not a measured win;
-    equivalence is pinned by tests/test_audio.py.
+    side.
 
-    Column pruning matters at 100 TB: this selects exactly the five
+    Column pruning matters at 100 TB: this selects exactly the six
     columns the check needs, so Parquet never materializes anything
     else; the scan of ``bytes`` dominates and is unavoidable for this
     check (and ONLY this check — structural checks never read it).
     """
-    pruned = df.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
-
-    if engine == "arrow":
-
-        def run_arrow(batches):
-            for batch in batches:
-                out = check_invariant_arrow_batch(batch, chunk_rows=chunk_rows)
-                if out is not None:
-                    yield out
-
-        return pruned.mapInArrow(run_arrow, schema=INVARIANT_OUT_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                out = check_invariant_batch(
-                    pdf.iloc[lo : lo + chunk_rows].reset_index(drop=True)
-                )
-                if len(out):
-                    yield out
-
-    return pruned.mapInPandas(run, schema=INVARIANT_OUT_SCHEMA)
+    return map_clips(
+        df, INVARIANT_COLS, check_invariant_arrow_batch, INVARIANT_OUT_SCHEMA
+    )

@@ -29,15 +29,17 @@ documented for anyone consuming the centroid of very short clips).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
 from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _gather_bytes,
-    _np_bool,
-    _varlen_buffers,
-    decode_payload_batch,
+    CLIP_COLS,
+    clip_batch,
+    decoded_chunks,
+    map_clips,
+    masked_array,
+    row_starts,
 )
 
 #: Head-window transform size (power of two keeps pocketfft on its
@@ -53,67 +55,43 @@ FEATURES_OUT_SCHEMA = (
 FEATURE_CHUNK_ROWS = 2048
 
 
-def spectral_batch(batch, *, n_fft: int = N_FFT_DEFAULT, chunk_rows: int = 0):
+def spectral_batch(batch, *, n_fft: int = N_FFT_DEFAULT):
     """One Arrow RecordBatch of clips -> one features RecordBatch
     (always the same row count as the input)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or FEATURE_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr_arr = col["sr_hz"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-    sr = (
-        pc.fill_null(pc.cast(sr_arr, pa.int64()), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-
+    cb = clip_batch(batch)
+    n, sr, col = cb.n, cb.sr, cb.col
     n_head = np.zeros(n, dtype=np.int64)
     dom_bin = np.zeros(n, dtype=np.float64)
     cent_bin = np.zeros(n, dtype=np.float64)
-    measured = np.zeros(n, dtype=bool)
+    measured = cb.n_avail > 0
     window = np.hanning(n_fft)
     bins = np.arange(1, n_fft // 2 + 1, dtype=np.float64)
 
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            heads = np.minimum(usable[sel] // width, n_fft)
-            head_bytes = heads * width
-            buf = (
-                _gather_bytes(b_data, b_off[sel], head_bytes, name="spec_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c).astype(np.float64)
-            starts = np.zeros(len(sel), dtype=np.int64)
-            if len(sel) > 1:
-                np.cumsum(heads[:-1], out=starts[1:])
-            cols = np.arange(n_fft)
-            valid = cols[None, :] < heads[:, None]
-            mat = np.zeros((len(sel), n_fft), dtype=np.float64)
-            mat[valid] = dec[(starts[:, None] + cols[None, :])[valid]]
-            mat *= window[None, :]
-            spec = np.abs(np.fft.rfft(mat, axis=1))
-            body = spec[:, 1:]  # DC excluded from both features
-            dom_bin[sel] = np.argmax(body, axis=1) + 1
-            tot = body.sum(axis=1)
-            cent_bin[sel] = (body * bins[None, :]).sum(axis=1) / np.maximum(
-                tot, 1e-30
-            )
-            n_head[sel] = heads
-            measured[sel] = True
+    for _c, sel, dec, heads in decoded_chunks(
+        cb,
+        measured,
+        max_samples=n_fft,
+        chunk_rows=FEATURE_CHUNK_ROWS,
+        buf_name="spec_buf",
+    ):
+        dec = dec.astype(np.float64)
+        starts = row_starts(heads)
+        cols = np.arange(n_fft)
+        valid = cols[None, :] < heads[:, None]
+        mat = np.zeros((len(sel), n_fft), dtype=np.float64)
+        mat[valid] = dec[(starts[:, None] + cols[None, :])[valid]]
+        mat *= window[None, :]
+        spec = np.abs(np.fft.rfft(mat, axis=1))
+        body = spec[:, 1:]  # DC excluded from both features
+        dom_bin[sel] = np.argmax(body, axis=1) + 1
+        tot = body.sum(axis=1)
+        cent_bin[sel] = (body * bins[None, :]).sum(axis=1) / np.maximum(
+            tot, 1e-30
+        )
+        n_head[sel] = heads
 
     hz_per_bin = sr.astype(np.float64) / float(n_fft)
     dom_hz = dom_bin * hz_per_bin
@@ -125,23 +103,14 @@ def spectral_batch(batch, *, n_fft: int = N_FFT_DEFAULT, chunk_rows: int = 0):
     # while keeping n_head — the head was still decoded and measured.
     hz_ok = measured & (sr > 0)
 
-    def _f64(vals):
-        return pa.array(
-            [float(v) if m else None for v, m in zip(vals, hz_ok)],
-            type=pa.float64(),
-        )
-
     return pa.RecordBatch.from_arrays(
         [
-            pc.cast(id_arr, pa.string()),
-            pc.cast(codec_arr, pa.string()),
-            pc.cast(sr_arr, pa.int32()),
-            pa.array(
-                [int(v) if m else None for v, m in zip(n_head, measured)],
-                type=pa.int64(),
-            ),
-            _f64(dom_hz),
-            _f64(cent_hz),
+            pc.cast(col["clip_id"], pa.string()),
+            pc.cast(col["codec"], pa.string()),
+            pc.cast(col["sr_hz"], pa.int32()),
+            masked_array(n_head, measured, pa.int64()),
+            masked_array(dom_hz, hz_ok),
+            masked_array(cent_hz, hz_ok),
         ],
         names=[
             "clip_id",
@@ -154,15 +123,11 @@ def spectral_batch(batch, *, n_fft: int = N_FFT_DEFAULT, chunk_rows: int = 0):
     )
 
 
-def spectral_features(df, *, n_fft: int = N_FFT_DEFAULT, chunk_rows: int = 0):
+def spectral_features(df, *, n_fft: int = N_FFT_DEFAULT):
     """DataFrame entry point: (clip_id, codec, sr_hz, n_head,
     dominant_freq_hz, spectral_centroid_hz) — one output row per input
     clip, zero shuffles (a pure mapInArrow over the pruned 4-column
     scan)."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield spectral_batch(batch, n_fft=n_fft, chunk_rows=chunk_rows)
-
-    return pruned.mapInArrow(run, schema=FEATURES_OUT_SCHEMA)
+    return map_clips(
+        df, CLIP_COLS, partial(spectral_batch, n_fft=n_fft), FEATURES_OUT_SCHEMA
+    )

@@ -47,17 +47,17 @@ audio_transform.resample_clips to a common rate first.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
 from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
+    CLIP_COLS,
     _WS,
-    _gather_bytes,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
+    clip_batch,
+    decoded_chunks,
+    map_clips,
+    row_starts,
 )
 
 FINGERPRINT_OUT_SCHEMA = (
@@ -115,12 +115,10 @@ def _window_envelope(
     if total == 0:
         e = np.empty(0, dtype=np.int8)
         return nwin, e, e.copy()
-    woff = np.zeros(len(nwin), dtype=np.int64)
-    np.cumsum(nwin[:-1], out=woff[1:])
+    woff = row_starts(nwin)
     ci = np.repeat(np.arange(len(nwin)), nwin)
     k = np.arange(total, dtype=np.int64) - woff[ci]
-    cstart = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=cstart[1:])
+    cstart = row_starts(lens)
     wstart = cstart[ci] + k * w[ci]
     wlen = np.minimum(w[ci], lens[ci] - k * w[ci]).astype(np.float64)
     # dtype= AND out=: exact float64 squares into a reused workspace
@@ -173,7 +171,6 @@ def fingerprint_batch(
     window_ms: int = WINDOW_MS_DEFAULT,
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """One Arrow RecordBatch of clips -> one fingerprint RecordBatch
     (same row count; NULL envelopes for undecodable rows; envelopes
@@ -181,25 +178,9 @@ def fingerprint_batch(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or FP_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr = _np_int(col["sr_hz"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
-    width = np.zeros(n, dtype=np.int64)
-    for c, m in is_codec.items():
-        width[m] = SAMPLE_WIDTH[c]
-    usable = np.where(width > 0, (byte_len // np.maximum(width, 1)) * width, 0)
-    n_samp = usable // np.maximum(width, 1)
+    cb = clip_batch(batch)
+    n, sr, col = cb.n, cb.sr, cb.col
+    n_samp = cb.n_avail
     w_all = np.maximum(sr * window_ms // 1000, 1)
     measured = (n_samp > 0) & (sr > 0)
 
@@ -210,29 +191,20 @@ def fingerprint_batch(
     data_a = np.zeros(2 * int(goff[-1]), dtype=np.int8)
     data_b = np.zeros(2 * int(goff[-1]), dtype=np.int8)
 
-    for c in KNOWN_CODECS:
-        wdt = SAMPLE_WIDTH[c]
-        sel_all = np.flatnonzero(is_codec[c] & measured)
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = (
-                _gather_bytes(b_data, b_off[sel], usable[sel], name="fp_buf")
-                if len(sel)
-                else np.empty(0, np.uint8)
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // wdt
-            nwin, env_a, env_b = _window_envelope(
-                dec, lens, w_all[sel], band_db, zc_bin
-            )
-            gwin = np.repeat(goff[sel], nwin) + (
-                np.arange(int(nwin.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(nwin) - nwin, nwin)
-            )
-            data_a[2 * gwin] = env_a[0::2]
-            data_a[2 * gwin + 1] = env_a[1::2]
-            data_b[2 * gwin] = env_b[0::2]
-            data_b[2 * gwin + 1] = env_b[1::2]
+    for _c, sel, dec, lens in decoded_chunks(
+        cb, measured, chunk_rows=FP_CHUNK_ROWS, buf_name="fp_buf"
+    ):
+        nwin, env_a, env_b = _window_envelope(
+            dec, lens, w_all[sel], band_db, zc_bin
+        )
+        gwin = np.repeat(goff[sel], nwin) + (
+            np.arange(int(nwin.sum()), dtype=np.int64)
+            - np.repeat(np.cumsum(nwin) - nwin, nwin)
+        )
+        data_a[2 * gwin] = env_a[0::2]
+        data_a[2 * gwin + 1] = env_a[1::2]
+        data_b[2 * gwin] = env_b[0::2]
+        data_b[2 * gwin + 1] = env_b[1::2]
 
     if 2 * goff[-1] > np.iinfo(np.int32).max:
         raise ValueError(
@@ -251,7 +223,7 @@ def fingerprint_batch(
     return pa.RecordBatch.from_arrays(
         [
             pc.cast(col["clip_id"], pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(col["codec"], pa.string()),
             pc.cast(col["sr_hz"], pa.int32()),
             pa.array(nwin_all, type=pa.int64()),
             pc.if_else(valid, mk(data_a), null_bin),
@@ -267,24 +239,14 @@ def acoustic_fingerprints(
     window_ms: int = WINDOW_MS_DEFAULT,
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """DataFrame entry point: (clip_id, codec, sr_hz, n_windows,
     env_a, env_b) — one row per input clip, zero shuffles (pure
     mapInArrow over the pruned 4-column scan)."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield fingerprint_batch(
-                batch,
-                window_ms=window_ms,
-                band_db=band_db,
-                zc_bin=zc_bin,
-                chunk_rows=chunk_rows,
-            )
-
-    return pruned.mapInArrow(run, schema=FINGERPRINT_OUT_SCHEMA)
+    kernel = partial(
+        fingerprint_batch, window_ms=window_ms, band_db=band_db, zc_bin=zc_bin
+    )
+    return map_clips(df, CLIP_COLS, kernel, FINGERPRINT_OUT_SCHEMA)
 
 
 def _banded_signatures(
@@ -293,7 +255,6 @@ def _banded_signatures(
     window_ms: int,
     band_db: float,
     zc_bin: int,
-    chunk_rows: int,
     min_windows: int,
 ):
     """(clip_id, band, sig) rows: one md5 digest per quantization grid
@@ -312,7 +273,6 @@ def _banded_signatures(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
     ).where(
         F.col("env_a").isNotNull()
         & (F.col("n_windows") >= F.lit(int(min_windows)))
@@ -337,7 +297,6 @@ def fingerprint_duplicate_pairs(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """Same-audio candidate pairs (clip_a, clip_b, band) with
     clip_a < clip_b: clips whose quantized loudness envelopes collide
@@ -356,7 +315,6 @@ def fingerprint_duplicate_pairs(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     left = sigs.alias("l")
@@ -383,7 +341,6 @@ def fingerprint_duplicate_groups(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """Same-audio duplicate GROUPS — the scale-safe artifact: one row
     per (band, signature) bucket holding >1 clip, with member count
@@ -400,7 +357,6 @@ def fingerprint_duplicate_groups(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     return (
@@ -421,7 +377,6 @@ def fingerprint_duplicate_clusters(
     band_db: float = BAND_DB_DEFAULT,
     zc_bin: int = ZC_BIN_DEFAULT,
     min_windows: int = MIN_WINDOWS_DEFAULT,
-    chunk_rows: int = 0,
 ):
     """(clip_id, cluster) for every clip in an acoustic duplicate
     cluster — the transitive closure across BOTH quantization grids
@@ -442,7 +397,6 @@ def fingerprint_duplicate_clusters(
         window_ms=window_ms,
         band_db=band_db,
         zc_bin=zc_bin,
-        chunk_rows=chunk_rows,
         min_windows=min_windows,
     )
     w = Window.partitionBy("band", "sig")

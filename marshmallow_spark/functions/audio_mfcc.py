@@ -53,15 +53,17 @@ recovered by f0 within 3 % — tests/test_audio_mfcc.py.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
 from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
-    _gather_bytes,
-    _np_bool,
-    _varlen_buffers,
-    decode_payload_batch,
+    CLIP_COLS,
+    clip_batch,
+    decoded_chunks,
+    map_clips,
+    masked_array,
+    row_starts,
 )
 
 N_FFT_MEL = 512
@@ -141,41 +143,6 @@ def dct_matrix(n_mfcc: int = N_MFCC, n_mels: int = N_MELS) -> np.ndarray:
     return d
 
 
-def _decode_inputs(batch):
-    """Shared Arrow-column unpack for both kernels."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-    sr = (
-        pc.fill_null(pc.cast(col["sr_hz"], pa.int64()), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    return col, b_valid, b_off, b_data, byte_len, sr
-
-
-def _gather_heads(sel, usable, width, head_limit, b_off, b_data):
-    """Slice + decode the head bytes of the selected rows; returns
-    (decoded flat float64, per-row head sample counts, per-row starts
-    into the flat buffer)."""
-    heads = np.minimum(usable[sel] // width, head_limit)
-    head_bytes = heads * width
-    buf = (
-        _gather_bytes(b_data, b_off[sel], head_bytes, name="mfcc_buf")
-        if len(sel)
-        else np.empty(0, np.uint8)
-    )
-    starts = np.zeros(len(sel), dtype=np.int64)
-    if len(sel) > 1:
-        np.cumsum(heads[:-1], out=starts[1:])
-    return buf, heads, starts
-
-
 def mfcc_batch(
     batch,
     *,
@@ -184,76 +151,66 @@ def mfcc_batch(
     max_frames: int = MAX_FRAMES,
     n_mels: int = N_MELS,
     n_mfcc: int = N_MFCC,
-    chunk_rows: int = 0,
 ):
     """One clips RecordBatch -> one MFCC RecordBatch (same row count)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or MFCC_CHUNK_ROWS
-    n = batch.num_rows
-    col, b_valid, b_off, b_data, byte_len, sr = _decode_inputs(batch)
-    codec_arr = col["codec"]
-
+    cb = clip_batch(batch)
+    n, sr, col = cb.n, cb.sr, cb.col
     head_limit = n_fft + hop * (max_frames - 1)
     n_frames = np.zeros(n, dtype=np.int64)
-    measured = np.zeros(n, dtype=bool)
+    # sr > 0 is part of measurability here: the filterbank edges
+    # are sr-derived, so no mel quantity exists without a rate.
+    measured = (cb.n_avail > 0) & (sr > 0)
     mfcc_out = np.zeros((n, n_mfcc), dtype=np.float64)
     peak_hz = np.zeros(n, dtype=np.float64)
     window = np.hanning(n_fft)
     dct = dct_matrix(n_mfcc, n_mels)
     cols_ = np.arange(n_fft, dtype=np.int64)
 
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        # sr > 0 is part of measurability here: the filterbank edges
-        # are sr-derived, so no mel quantity exists without a rate.
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0) & (sr > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            dec_buf, heads, starts = _gather_heads(
-                sel, usable, width, head_limit, b_off, b_data
-            )
-            dec = decode_payload_batch(dec_buf, None, c).astype(np.float64)
-            frames = 1 + np.clip((heads - n_fft) // hop, 0, max_frames - 1)
-            total_f = int(frames.sum())
-            rep = np.repeat(np.arange(len(sel)), frames)
-            fstarts = np.zeros(len(sel), dtype=np.int64)
-            if len(sel) > 1:
-                np.cumsum(frames[:-1], out=fstarts[1:])
-            ford = np.arange(total_f, dtype=np.int64) - np.repeat(
-                fstarts, frames
-            )
-            src0 = starts[rep] + ford * hop
-            remain = heads[rep] - ford * hop
-            valid = cols_[None, :] < remain[:, None]
-            mat = np.zeros((total_f, n_fft), dtype=np.float64)
-            mat[valid] = dec[(src0[:, None] + cols_[None, :])[valid]]
-            mat *= window[None, :]
-            spec = np.abs(np.fft.rfft(mat, axis=1))
-            np.multiply(spec, spec, out=spec)  # power spectrum
-            logmel = np.empty((total_f, n_mels), dtype=np.float64)
-            srs = sr[sel]
-            for u in np.unique(srs):
-                g = np.flatnonzero(srs == u)
-                fg = np.isin(rep, g)
-                fb, _ = mel_filterbank(int(u), n_fft, n_mels)
-                logmel[fg] = np.log(spec[fg] @ fb.T + 1e-10)
-            mf = logmel @ dct.T
-            inv_frames = 1.0 / frames[:, None]
-            mfcc_out[sel] = np.add.reduceat(mf, fstarts, axis=0) * inv_frames
-            mel_mean = np.add.reduceat(logmel, fstarts, axis=0) * inv_frames
-            pk = np.argmax(mel_mean, axis=1)
-            for u in np.unique(srs):
-                g = np.flatnonzero(srs == u)
-                _, centers = mel_filterbank(int(u), n_fft, n_mels)
-                peak_hz[sel[g]] = centers[pk[g]]
-            n_frames[sel] = frames
-            measured[sel] = True
+    for _c, sel, dec, heads in decoded_chunks(
+        cb,
+        measured,
+        max_samples=head_limit,
+        chunk_rows=MFCC_CHUNK_ROWS,
+        buf_name="mfcc_buf",
+    ):
+        dec = dec.astype(np.float64)
+        starts = row_starts(heads)
+        frames = 1 + np.clip((heads - n_fft) // hop, 0, max_frames - 1)
+        total_f = int(frames.sum())
+        rep = np.repeat(np.arange(len(sel)), frames)
+        fstarts = row_starts(frames)
+        ford = np.arange(total_f, dtype=np.int64) - np.repeat(
+            fstarts, frames
+        )
+        src0 = starts[rep] + ford * hop
+        remain = heads[rep] - ford * hop
+        valid = cols_[None, :] < remain[:, None]
+        mat = np.zeros((total_f, n_fft), dtype=np.float64)
+        mat[valid] = dec[(src0[:, None] + cols_[None, :])[valid]]
+        mat *= window[None, :]
+        spec = np.abs(np.fft.rfft(mat, axis=1))
+        np.multiply(spec, spec, out=spec)  # power spectrum
+        logmel = np.empty((total_f, n_mels), dtype=np.float64)
+        srs = sr[sel]
+        for u in np.unique(srs):
+            g = np.flatnonzero(srs == u)
+            fg = np.isin(rep, g)
+            fb, _ = mel_filterbank(int(u), n_fft, n_mels)
+            logmel[fg] = np.log(spec[fg] @ fb.T + 1e-10)
+        mf = logmel @ dct.T
+        inv_frames = 1.0 / frames[:, None]
+        mfcc_out[sel] = np.add.reduceat(mf, fstarts, axis=0) * inv_frames
+        mel_mean = np.add.reduceat(logmel, fstarts, axis=0) * inv_frames
+        pk = np.argmax(mel_mean, axis=1)
+        for u in np.unique(srs):
+            g = np.flatnonzero(srs == u)
+            _, centers = mel_filterbank(int(u), n_fft, n_mels)
+            peak_hz[sel[g]] = centers[pk[g]]
+        n_frames[sel] = frames
 
-    null_mask = ~measured
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(np.where(measured, n_mfcc, 0), out=offsets[1:])
     mfcc_list = pa.ListArray.from_arrays(
@@ -263,10 +220,10 @@ def mfcc_batch(
     return pa.RecordBatch.from_arrays(
         [
             pc.cast(col["clip_id"], pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(col["codec"], pa.string()),
             pc.cast(col["sr_hz"], pa.int32()),
-            pa.array(n_frames, mask=null_mask),
-            pa.array(peak_hz, mask=null_mask),
+            masked_array(n_frames, measured, pa.int64()),
+            masked_array(peak_hz, measured),
             mfcc_list,
         ],
         names=["clip_id", "codec", "sr_hz", "n_frames", "mel_peak_hz", "mfcc"],
@@ -279,116 +236,109 @@ def pitch_batch(
     head: int = PITCH_HEAD,
     fmin: float = PITCH_FMIN,
     fmax: float = PITCH_FMAX,
-    chunk_rows: int = 0,
 ):
     """One clips RecordBatch -> one pitch RecordBatch (same row count)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or PITCH_CHUNK_ROWS
-    n = batch.num_rows
-    col, b_valid, b_off, b_data, byte_len, sr = _decode_inputs(batch)
-    codec_arr = col["codec"]
-
+    cb = clip_batch(batch)
+    n, sr, col = cb.n, cb.sr, cb.col
     n_head = np.zeros(n, dtype=np.int64)
     f0 = np.zeros(n, dtype=np.float64)
     conf = np.zeros(n, dtype=np.float64)
-    measured = np.zeros(n, dtype=bool)
+    measured = (cb.n_avail > 0) & (sr > 0)
     f0_ok = np.zeros(n, dtype=bool)
     nfft2 = 1
     while nfft2 < 2 * head:
         nfft2 *= 2
 
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0) & (sr > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            dec_buf, heads, starts = _gather_heads(
-                sel, usable, width, head, b_off, b_data
-            )
-            dec = decode_payload_batch(dec_buf, None, c).astype(np.float64)
-            cols_ = np.arange(head, dtype=np.int64)
-            valid = cols_[None, :] < heads[:, None]
-            mat = np.zeros((len(sel), head), dtype=np.float64)
-            mat[valid] = dec[(starts[:, None] + cols_[None, :])[valid]]
-            # mean-remove over the REAL samples, keep padding at zero
-            row_mean = mat.sum(axis=1) / heads
-            mat -= row_mean[:, None]
-            mat[~valid] = 0.0
-            spec = np.fft.rfft(mat, n=nfft2, axis=1)
-            np.multiply(spec, np.conj(spec), out=spec)
-            # biased autocorrelation; only lags up to the search band
-            srs = sr[sel]
-            lag_min = np.maximum(2, np.floor(srs / fmax).astype(np.int64))
-            lag_max = np.minimum(
-                np.ceil(srs / fmin).astype(np.int64), heads - 2
-            )
-            searchable = lag_max > lag_min
-            L = int(lag_max.max(initial=2)) + 2
-            r = np.fft.irfft(spec, n=nfft2, axis=1)[:, :L]
-            r0 = np.maximum(r[:, 0], 1e-30)
-            lags = np.arange(L, dtype=np.int64)
-            allowed = (lags[None, :] >= lag_min[:, None]) & (
-                lags[None, :] <= lag_max[:, None]
-            )
-            body = np.where(allowed, r, -np.inf)
-            pk = np.argmax(body, axis=1)
-            rows = np.arange(len(sel))
-            # Octave-error guard: when the true period lag is far from
-            # the integer grid (e.g. 550 Hz at 8 kHz -> lag 14.5), a
-            # 2x/3x multiple that lands NEAR the grid correlates
-            # higher and argmax reports a subharmonic. Standard fix:
-            # take the SMALLEST in-band lag whose correlation reaches
-            # 90 % of the in-band peak — for a periodic signal that is
-            # the first-period peak region, refined below by parabolic
-            # interpolation.
-            thresh = 0.9 * r[rows, pk]
-            cand = allowed & (r >= thresh[:, None])
-            fc = np.argmax(cand, axis=1)  # first crossing per row
-            # The crossing sits on the rising edge of the first-period
-            # peak (within a quarter period for any f/sr <= 0.075, the
-            # documented band: cos(pi*f/sr) >= 0.97 > 0.9), so the
-            # first-period LOCAL max lies in [fc, 1.5*fc] and the
-            # second-period peak (>= 2*0.75*fc) does not — a capped
-            # argmax recovers the true peak for parabolic refinement.
-            cap = np.minimum((3 * fc) // 2, lag_max)
-            in_win = (
-                cand
-                & (lags[None, :] >= fc[:, None])
-                & (lags[None, :] <= cap[:, None])
-            )
-            body = np.where(in_win, r, -np.inf)
-            pk = np.argmax(body, axis=1)
-            # parabolic sub-sample interpolation around the peak
-            pm = np.clip(pk - 1, 0, L - 1)
-            pp = np.clip(pk + 1, 0, L - 1)
-            y0, y1, y2 = r[rows, pm], r[rows, pk], r[rows, pp]
-            denom = y0 - 2.0 * y1 + y2
-            shift = np.where(
-                np.abs(denom) > 1e-30, 0.5 * (y0 - y2) / denom, 0.0
-            )
-            shift = np.clip(shift, -0.5, 0.5)
-            lag_f = pk + np.where((pk > lag_min) & (pk < lag_max), shift, 0.0)
-            ok = searchable & (r[rows, pk] > 0)
-            f0[sel] = np.where(ok, srs / np.maximum(lag_f, 1e-30), 0.0)
-            conf[sel] = np.where(
-                searchable, np.clip(r[rows, pk] / r0, 0.0, 1.0), 0.0
-            )
-            f0_ok[sel] = ok
-            n_head[sel] = heads
-            measured[sel] = True
+    for _c, sel, dec, heads in decoded_chunks(
+        cb,
+        measured,
+        max_samples=head,
+        chunk_rows=PITCH_CHUNK_ROWS,
+        buf_name="mfcc_buf",
+    ):
+        dec = dec.astype(np.float64)
+        starts = row_starts(heads)
+        cols_ = np.arange(head, dtype=np.int64)
+        valid = cols_[None, :] < heads[:, None]
+        mat = np.zeros((len(sel), head), dtype=np.float64)
+        mat[valid] = dec[(starts[:, None] + cols_[None, :])[valid]]
+        # mean-remove over the REAL samples, keep padding at zero
+        row_mean = mat.sum(axis=1) / heads
+        mat -= row_mean[:, None]
+        mat[~valid] = 0.0
+        spec = np.fft.rfft(mat, n=nfft2, axis=1)
+        np.multiply(spec, np.conj(spec), out=spec)
+        # biased autocorrelation; only lags up to the search band
+        srs = sr[sel]
+        lag_min = np.maximum(2, np.floor(srs / fmax).astype(np.int64))
+        lag_max = np.minimum(
+            np.ceil(srs / fmin).astype(np.int64), heads - 2
+        )
+        searchable = lag_max > lag_min
+        L = int(lag_max.max(initial=2)) + 2
+        r = np.fft.irfft(spec, n=nfft2, axis=1)[:, :L]
+        r0 = np.maximum(r[:, 0], 1e-30)
+        lags = np.arange(L, dtype=np.int64)
+        allowed = (lags[None, :] >= lag_min[:, None]) & (
+            lags[None, :] <= lag_max[:, None]
+        )
+        body = np.where(allowed, r, -np.inf)
+        pk = np.argmax(body, axis=1)
+        rows = np.arange(len(sel))
+        # Octave-error guard: when the true period lag is far from
+        # the integer grid (e.g. 550 Hz at 8 kHz -> lag 14.5), a
+        # 2x/3x multiple that lands NEAR the grid correlates
+        # higher and argmax reports a subharmonic. Standard fix:
+        # take the SMALLEST in-band lag whose correlation reaches
+        # 90 % of the in-band peak — for a periodic signal that is
+        # the first-period peak region, refined below by parabolic
+        # interpolation.
+        thresh = 0.9 * r[rows, pk]
+        cand = allowed & (r >= thresh[:, None])
+        fc = np.argmax(cand, axis=1)  # first crossing per row
+        # The crossing sits on the rising edge of the first-period
+        # peak (within a quarter period for any f/sr <= 0.075, the
+        # documented band: cos(pi*f/sr) >= 0.97 > 0.9), so the
+        # first-period LOCAL max lies in [fc, 1.5*fc] and the
+        # second-period peak (>= 2*0.75*fc) does not — a capped
+        # argmax recovers the true peak for parabolic refinement.
+        cap = np.minimum((3 * fc) // 2, lag_max)
+        in_win = (
+            cand
+            & (lags[None, :] >= fc[:, None])
+            & (lags[None, :] <= cap[:, None])
+        )
+        body = np.where(in_win, r, -np.inf)
+        pk = np.argmax(body, axis=1)
+        # parabolic sub-sample interpolation around the peak
+        pm = np.clip(pk - 1, 0, L - 1)
+        pp = np.clip(pk + 1, 0, L - 1)
+        y0, y1, y2 = r[rows, pm], r[rows, pk], r[rows, pp]
+        denom = y0 - 2.0 * y1 + y2
+        shift = np.where(
+            np.abs(denom) > 1e-30, 0.5 * (y0 - y2) / denom, 0.0
+        )
+        shift = np.clip(shift, -0.5, 0.5)
+        lag_f = pk + np.where((pk > lag_min) & (pk < lag_max), shift, 0.0)
+        ok = searchable & (r[rows, pk] > 0)
+        f0[sel] = np.where(ok, srs / np.maximum(lag_f, 1e-30), 0.0)
+        conf[sel] = np.where(
+            searchable, np.clip(r[rows, pk] / r0, 0.0, 1.0), 0.0
+        )
+        f0_ok[sel] = ok
+        n_head[sel] = heads
 
     return pa.RecordBatch.from_arrays(
         [
             pc.cast(col["clip_id"], pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(col["codec"], pa.string()),
             pc.cast(col["sr_hz"], pa.int32()),
-            pa.array(n_head, mask=~measured),
-            pa.array(f0, mask=~(measured & f0_ok)),
-            pa.array(conf, mask=~measured),
+            masked_array(n_head, measured, pa.int64()),
+            masked_array(f0, measured & f0_ok),
+            masked_array(conf, measured),
         ],
         names=["clip_id", "codec", "sr_hz", "n_head", "f0_hz", "voiced_conf"],
     )
@@ -402,25 +352,18 @@ def mfcc_features(
     max_frames: int = MAX_FRAMES,
     n_mels: int = N_MELS,
     n_mfcc: int = N_MFCC,
-    chunk_rows: int = 0,
 ):
     """DataFrame entry point: one output row per input clip, zero
     shuffles (pure mapInArrow over the pruned 4-column scan)."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield mfcc_batch(
-                batch,
-                n_fft=n_fft,
-                hop=hop,
-                max_frames=max_frames,
-                n_mels=n_mels,
-                n_mfcc=n_mfcc,
-                chunk_rows=chunk_rows,
-            )
-
-    return pruned.mapInArrow(run, schema=MFCC_OUT_SCHEMA)
+    kernel = partial(
+        mfcc_batch,
+        n_fft=n_fft,
+        hop=hop,
+        max_frames=max_frames,
+        n_mels=n_mels,
+        n_mfcc=n_mfcc,
+    )
+    return map_clips(df, CLIP_COLS, kernel, MFCC_OUT_SCHEMA)
 
 
 def mfcc_near_duplicates(
@@ -497,16 +440,8 @@ def pitch_features(
     head: int = PITCH_HEAD,
     fmin: float = PITCH_FMIN,
     fmax: float = PITCH_FMAX,
-    chunk_rows: int = 0,
 ):
     """DataFrame entry point: one output row per input clip, zero
     shuffles (pure mapInArrow over the pruned 4-column scan)."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield pitch_batch(
-                batch, head=head, fmin=fmin, fmax=fmax, chunk_rows=chunk_rows
-            )
-
-    return pruned.mapInArrow(run, schema=PITCH_OUT_SCHEMA)
+    kernel = partial(pitch_batch, head=head, fmin=fmin, fmax=fmax)
+    return map_clips(df, CLIP_COLS, kernel, PITCH_OUT_SCHEMA)

@@ -24,16 +24,18 @@ classification is the schema engine's job, measurement is ours.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
 from .audio import (
-    KNOWN_CODECS,
-    SAMPLE_WIDTH,
+    CLIP_COLS,
     _WS,
-    _np_bool,
-    _np_int,
-    _varlen_buffers,
-    decode_payload_batch,
+    clip_batch,
+    decoded_chunks,
+    map_clips,
+    masked_array,
+    row_starts,
 )
 
 #: |sample| at or above this (in [-1, 1] float PCM) counts as clipped —
@@ -68,9 +70,7 @@ def _segment_stats(x: np.ndarray, lens: np.ndarray):
     ``x`` partitioned into ``lens``-sized segments. Returns float64
     arrays (sum, sumsq, peak, clipped_count, zero_crossings); rows with
     lens == 0 are zeroed (reduceat's zero-length quirk masked)."""
-    starts = np.zeros(len(lens), dtype=np.int64)
-    if len(lens) > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
+    starts = row_starts(lens)
     n = x.shape[0]
     nz = lens > 0
     if n == 0:
@@ -138,54 +138,30 @@ def _segment_stats(x: np.ndarray, lens: np.ndarray):
     return s, ss, peak, clipped, zc
 
 
-def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
-    """One Arrow RecordBatch of clips -> one metrics RecordBatch
-    (always same row count as the input)."""
+def _quality_batch(cb, codec_col, chunks):
+    """Metrics RecordBatch (QUALITY_OUT_SCHEMA, one row per row of
+    ``cb``) from decoded_chunks-shaped ``(codec, sel, samples, lens)``
+    chunks covering exactly the decodable rows (``cb.n_avail > 0``);
+    every other row is NULL."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or QUALITY_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    id_arr = col["clip_id"]
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
+    n = cb.n
+    measured = cb.n_avail > 0
     n_samp = np.zeros(n, dtype=np.int64)
     sum_x = np.zeros(n)
     sum_xx = np.zeros(n)
     peak = np.zeros(n)
     clipped = np.zeros(n)
     zcross = np.zeros(n)
-    measured = np.zeros(n, dtype=bool)
-
-    for c in KNOWN_CODECS:
-        mask = _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        width = SAMPLE_WIDTH[c]
-        usable = (byte_len // width) * width
-        sel_all = np.flatnonzero(mask & b_valid & (usable > 0))
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            if len(sel):
-                buf = np.concatenate(
-                    [b_data[b_off[i] : b_off[i] + usable[i]] for i in sel],
-                    out=_WS._get("q_buf", int(usable[sel].sum()), np.uint8),
-                )
-            else:
-                buf = np.empty(0, np.uint8)
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // width
-            s, ss, pk, cl, zc = _segment_stats(dec, lens)
-            n_samp[sel] = lens
-            sum_x[sel] = s
-            sum_xx[sel] = ss
-            peak[sel] = pk
-            clipped[sel] = cl
-            zcross[sel] = zc
-            measured[sel] = True
+    for _c, sel, x, lens in chunks:
+        s, ss, pk, cl, zc = _segment_stats(x, lens)
+        n_samp[sel] = lens
+        sum_x[sel] = s
+        sum_xx[sel] = ss
+        peak[sel] = pk
+        clipped[sel] = cl
+        zcross[sel] = zc
 
     with np.errstate(divide="ignore", invalid="ignore"):
         denom = np.maximum(n_samp, 1).astype(np.float64)
@@ -195,27 +171,18 @@ def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
         clip_ratio = clipped / denom
         zcr = zcross / np.maximum(n_samp - 1, 1).astype(np.float64)
 
-    unmeasured = ~measured
-
-    def _f64(vals):
-        return pa.array(
-            np.ascontiguousarray(vals, dtype=np.float64), mask=unmeasured
-        )
-
-    is_silent = pa.array(rms_dbfs < SILENCE_DBFS, mask=unmeasured)
-    is_clipped = pa.array(clip_ratio >= CLIPPED_RATIO, mask=unmeasured)
     return pa.RecordBatch.from_arrays(
         [
-            pc.cast(id_arr, pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(cb.col["clip_id"], pa.string()),
+            codec_col,
             pa.array(n_samp, type=pa.int64()),
-            _f64(rms_dbfs),
-            _f64(peak),
-            _f64(dc),
-            _f64(clip_ratio),
-            _f64(zcr),
-            is_silent,
-            is_clipped,
+            masked_array(rms_dbfs, measured),
+            masked_array(peak, measured),
+            masked_array(dc, measured),
+            masked_array(clip_ratio, measured),
+            masked_array(zcr, measured),
+            masked_array(rms_dbfs < SILENCE_DBFS, measured, pa.bool_()),
+            masked_array(clip_ratio >= CLIPPED_RATIO, measured, pa.bool_()),
         ],
         names=[
             "clip_id",
@@ -230,6 +197,19 @@ def quality_metrics_arrow_batch(batch, *, chunk_rows: int = 0):
             "is_clipped",
         ],
     )
+
+
+def quality_metrics_arrow_batch(batch):
+    """One Arrow RecordBatch of clips -> one metrics RecordBatch
+    (always same row count as the input)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cb = clip_batch(batch)
+    chunks = decoded_chunks(
+        cb, cb.n_avail > 0, chunk_rows=QUALITY_CHUNK_ROWS, buf_name="q_buf"
+    )
+    return _quality_batch(cb, pc.cast(cb.col["codec"], pa.string()), chunks)
 
 
 def _quality_rules(
@@ -306,7 +286,6 @@ def quality_violations(
     min_rms_dbfs: float | None = None,
     max_clipping_ratio: float | None = None,
     max_abs_dc_offset: float | None = None,
-    chunk_rows: int = 0,
 ):
     """Threshold gate over the metrics: violation rows (clip_id, field,
     message) for silent / clipped / DC-offset clips, messages rendered
@@ -325,7 +304,7 @@ def quality_violations(
     from pyspark.sql import functions as F
 
     rules = _quality_rules(min_rms_dbfs, max_clipping_ratio, max_abs_dc_offset)
-    m = audio_quality_metrics(df, chunk_rows=chunk_rows)
+    m = audio_quality_metrics(df)
     return (
         m.select("clip_id", F.explode(_rule_pairs_array(rules)).alias("_v"))
         .select("clip_id", F.col("_v.field").alias("field"), F.col("_v.message").alias("message"))
@@ -339,7 +318,6 @@ def fused_audio_violations(
     max_clipping_ratio: float | None = None,
     max_abs_dc_offset: float | None = None,
     invariant_filter=None,
-    chunk_rows: int = 0,
 ):
     """SNR invariant + quality gate from ONE decode of ``bytes``:
     violation rows (clip_id, field, message, check) with check in
@@ -371,7 +349,12 @@ def fused_audio_violations(
     the audio payload column."""
     from pyspark.sql import functions as F
 
-    from .audio import FUSED_OUT_SCHEMA, KNOWN_CODECS, check_invariant_arrow_batch
+    from .audio import (
+        FUSED_OUT_SCHEMA,
+        INVARIANT_COLS,
+        KNOWN_CODECS,
+        check_invariant_arrow_batch,
+    )
 
     rules = _quality_rules(min_rms_dbfs, max_clipping_ratio, max_abs_dc_offset)
     qspec = {
@@ -384,25 +367,12 @@ def fused_audio_violations(
         F.col("codec").isin(*KNOWN_CODECS) & F.col("bytes").isNotNull()
     )
     elig = invariant_filter if invariant_filter is not None else F.lit(True)
-    pruned = base.select(
-        "clip_id",
-        "bytes",
-        "sr_hz",
-        "dur_ms",
-        "codec",
-        "transcript",
-        elig.alias("_inv_eligible"),
+    raw = map_clips(
+        base,
+        [*INVARIANT_COLS, elig.alias("_inv_eligible")],
+        partial(check_invariant_arrow_batch, quality=qspec),
+        FUSED_OUT_SCHEMA,
     )
-
-    def run(batches):
-        for batch in batches:
-            out = check_invariant_arrow_batch(
-                batch, chunk_rows=chunk_rows, quality=qspec
-            )
-            if out is not None:
-                yield out
-
-    raw = pruned.mapInArrow(run, FUSED_OUT_SCHEMA)
     pairs = F.when(
         F.col("check") == F.lit("audio"),
         F.array(F.struct(F.col("field").alias("field"), F.col("message").alias("message"))),
@@ -418,18 +388,14 @@ def fused_audio_violations(
     )
 
 
-def audio_quality_metrics(df, *, chunk_rows: int = 0):
+def audio_quality_metrics(df):
     """DataFrame entry point: (clip_id, codec, n_samples, rms_dbfs,
     peak, dc_offset, clipping_ratio, zero_crossing_rate, is_silent,
     is_clipped) — one output row per input clip, zero shuffles (a pure
     mapInArrow over the pruned 4-column scan)."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield quality_metrics_arrow_batch(batch, chunk_rows=chunk_rows)
-
-    return pruned.mapInArrow(run, schema=QUALITY_OUT_SCHEMA)
+    return map_clips(
+        df, CLIP_COLS, quality_metrics_arrow_batch, QUALITY_OUT_SCHEMA
+    )
 
 
 NOISE_OUT_SCHEMA = (
@@ -454,12 +420,10 @@ def _window_powers(x, lens, w):
     total = int(nwin.sum())
     if total == 0:
         return nwin, np.empty(0), np.empty(0, dtype=np.int64), np.empty(0)
-    woff = np.zeros(len(nwin), dtype=np.int64)
-    np.cumsum(nwin[:-1], out=woff[1:])
+    woff = row_starts(nwin)
     ci = np.repeat(np.arange(len(nwin)), nwin)
     k = np.arange(total, dtype=np.int64) - woff[ci]
-    cstart = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=cstart[1:])
+    cstart = row_starts(lens)
     wstart = cstart[ci] + k * w[ci]
     wlen = np.minimum(w[ci], lens[ci] - k * w[ci]).astype(np.float64)
     xx = np.multiply(x, x, dtype=np.float64, out=_WS.f64("nf_xx", x.shape[0]))
@@ -467,7 +431,7 @@ def _window_powers(x, lens, w):
     return nwin, ss / np.maximum(wlen, 1.0), ci, wlen
 
 
-def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: int = 0):
+def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS):
     """One Arrow RecordBatch -> reference-FREE signal/noise estimates:
     noise floor = the quietest ``window_ms`` window's RMS (speech
     pauses carry the noise bed), est SNR = overall RMS over that
@@ -480,20 +444,8 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    chunk_rows = chunk_rows or QUALITY_CHUNK_ROWS
-    n = batch.num_rows
-    col = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-    codec_arr = col["codec"]
-    b_arr = col["bytes"]
-    sr = _np_int(col["sr_hz"])
-    b_valid = _np_bool(pc.is_valid(b_arr))
-    b_off, b_data = _varlen_buffers(b_arr)
-    byte_len = np.where(b_valid, np.diff(b_off), 0).astype(np.int64)
-
-    is_codec = {
-        c: _np_bool(pc.fill_null(pc.equal(codec_arr, pa.scalar(c)), False))
-        for c in KNOWN_CODECS
-    }
+    cb = clip_batch(batch)
+    n, sr = cb.n, cb.sr
     nwin_all = np.zeros(n, dtype=np.int64)
     sum_pow = np.zeros(n)
     sum_len = np.zeros(n)
@@ -501,35 +453,25 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     measured = np.zeros(n, dtype=bool)
     w_all = np.maximum(sr * window_ms // 1000, 1)
 
-    for c in KNOWN_CODECS:
-        wdt = SAMPLE_WIDTH[c]
-        usable = np.where(byte_len > 0, (byte_len // wdt) * wdt, 0)
-        sel_all = np.flatnonzero(
-            is_codec[c] & b_valid & (usable > 0) & (sr > 0)
-        )
-        for lo in range(0, len(sel_all), chunk_rows):
-            sel = sel_all[lo : lo + chunk_rows]
-            buf = np.concatenate(
-                [b_data[b_off[i] : b_off[i] + usable[i]] for i in sel],
-                out=_WS._get("nf_buf", int(usable[sel].sum()), np.uint8),
-            )
-            dec = decode_payload_batch(buf, None, c)
-            lens = usable[sel] // wdt
-            nwin, wpow, ci, _ = _window_powers(dec, lens, w_all[sel])
-            nz = nwin > 0
-            woff = np.zeros(len(nwin), dtype=np.int64)
-            np.cumsum(nwin[:-1], out=woff[1:])
-            starts = woff[nz]
-            tot = np.zeros(len(nwin))
-            mn = np.zeros(len(nwin))
-            if starts.size:
-                tot[nz] = np.add.reduceat(wpow, starts)
-                mn[nz] = np.minimum.reduceat(wpow, starts)
-            nwin_all[sel] = nwin
-            sum_pow[sel] = tot
-            sum_len[sel] = nwin  # windows per clip (powers are per-window means)
-            min_pow[sel] = mn
-            measured[sel] = nwin >= 2
+    for _c, sel, dec, lens in decoded_chunks(
+        cb,
+        (cb.n_avail > 0) & (sr > 0),
+        chunk_rows=QUALITY_CHUNK_ROWS,
+        buf_name="nf_buf",
+    ):
+        nwin, wpow, ci, _ = _window_powers(dec, lens, w_all[sel])
+        nz = nwin > 0
+        starts = row_starts(nwin)[nz]
+        tot = np.zeros(len(nwin))
+        mn = np.zeros(len(nwin))
+        if starts.size:
+            tot[nz] = np.add.reduceat(wpow, starts)
+            mn[nz] = np.minimum.reduceat(wpow, starts)
+        nwin_all[sel] = nwin
+        sum_pow[sel] = tot
+        sum_len[sel] = nwin  # windows per clip (powers are per-window means)
+        min_pow[sel] = mn
+        measured[sel] = nwin >= 2
 
     with np.errstate(divide="ignore", invalid="ignore"):
         # mean of per-window mean powers (windows tile the clip; the
@@ -540,21 +482,14 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
         noise_dbfs = 10.0 * np.log10(np.maximum(min_pow, 1e-12))
         est_snr = rms_dbfs - noise_dbfs
 
-    unmeasured = ~measured
-
-    def _f64(vals):
-        return pa.array(
-            np.ascontiguousarray(vals, dtype=np.float64), mask=unmeasured
-        )
-
     return pa.RecordBatch.from_arrays(
         [
-            pc.cast(col["clip_id"], pa.string()),
-            pc.cast(codec_arr, pa.string()),
+            pc.cast(cb.col["clip_id"], pa.string()),
+            pc.cast(cb.col["codec"], pa.string()),
             pa.array(nwin_all, type=pa.int64()),
-            _f64(rms_dbfs),
-            _f64(noise_dbfs),
-            _f64(est_snr),
+            masked_array(rms_dbfs, measured),
+            masked_array(noise_dbfs, measured),
+            masked_array(est_snr, measured),
         ],
         names=[
             "clip_id",
@@ -567,19 +502,16 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: in
     )
 
 
-def noise_floor_metrics(df, *, window_ms: int = NOISE_WINDOW_MS, chunk_rows: int = 0):
+def noise_floor_metrics(df, *, window_ms: int = NOISE_WINDOW_MS):
     """DataFrame entry point for the reference-free estimator:
     (clip_id, codec, n_windows, rms_dbfs, noise_floor_dbfs,
     est_snr_db) — one row per clip, zero shuffles."""
-    pruned = df.select("clip_id", "bytes", "sr_hz", "codec")
-
-    def run(batches):
-        for batch in batches:
-            yield noise_floor_batch(
-                batch, window_ms=window_ms, chunk_rows=chunk_rows
-            )
-
-    return pruned.mapInArrow(run, schema=NOISE_OUT_SCHEMA)
+    return map_clips(
+        df,
+        CLIP_COLS,
+        partial(noise_floor_batch, window_ms=window_ms),
+        NOISE_OUT_SCHEMA,
+    )
 
 
 #: default (lo, hi) fixed-bin bounds for snapshot-drift monitoring of
@@ -602,7 +534,6 @@ def audio_feature_drift(
     *,
     features: dict[str, tuple[float, float]] | None = None,
     nbins: int = 20,
-    chunk_rows: int = 0,
     round_digits: int = 6,
 ):
     """Distribution drift of DECODED-signal quality metrics between two
@@ -627,9 +558,7 @@ def audio_feature_drift(
     from ..operators.drift import divergence_report_multi
 
     feats = dict(features or DRIFT_FEATURES_DEFAULT)
-    m0 = audio_quality_metrics(df_ref, chunk_rows=chunk_rows).withColumn(
-        "_snap", F.lit(0)
-    )
+    m0 = audio_quality_metrics(df_ref).withColumn("_snap", F.lit(0))
     # Composition fusion (guide §4): when the current snapshot is a
     # normalize_gain transform, its metrics come from ONE decode of the
     # SOURCE payload — gain + pcm16 quantization applied in memory —
@@ -642,14 +571,12 @@ def audio_feature_drift(
     if fusion is not None:
         from .audio_transform import gain_normalized_quality_metrics
 
-        src, target_dbfs, src_chunk = fusion
+        src, target_dbfs = fusion
         m1 = gain_normalized_quality_metrics(
-            src, target_dbfs=target_dbfs, chunk_rows=chunk_rows or src_chunk
+            src, target_dbfs=target_dbfs
         ).withColumn("_snap", F.lit(1))
     else:
-        m1 = audio_quality_metrics(df_cur, chunk_rows=chunk_rows).withColumn(
-            "_snap", F.lit(1)
-        )
+        m1 = audio_quality_metrics(df_cur).withColumn("_snap", F.lit(1))
     return divergence_report_multi(
         m0.unionByName(m1),
         feats,

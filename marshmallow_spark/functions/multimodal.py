@@ -130,7 +130,7 @@ def _fake_image_features_batch(payloads: np.ndarray, feat_dim: int) -> np.ndarra
     buf, lens, starts = _payload_offsets(payloads)
     n = len(payloads)
     arr = np.frombuffer(buf, dtype=np.uint8)
-    # int32 everywhere: the combined index tops out at chunk_rows*256
+    # int32 everywhere: the combined index tops out at UDF_CHUNK_ROWS*256
     # (~256k), and avoiding int64 temporaries halves the memory traffic
     # of the three passes below
     row_base = np.repeat(
@@ -143,9 +143,7 @@ def _fake_image_features_batch(payloads: np.ndarray, feat_dim: int) -> np.ndarra
     return feats[:, :feat_dim]
 
 
-def image_features(
-    df: DataFrame, *, feat_dim: int = 256, chunk_rows: int = UDF_CHUNK_ROWS
-) -> DataFrame:
+def image_features(df: DataFrame, *, feat_dim: int = 256) -> DataFrame:
     """Batch feature extraction over an IMAGE_SCHEMA table.
 
     Arrow-batched mapInPandas: selects only the needed columns (the
@@ -157,8 +155,8 @@ def image_features(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                chunk = pdf.iloc[lo : lo + chunk_rows]
+            for lo in range(0, len(pdf), UDF_CHUNK_ROWS):
+                chunk = pdf.iloc[lo : lo + UDF_CHUNK_ROWS]
                 payloads = chunk["bytes"].to_numpy(dtype=object)
                 if REAL_DECODERS_AVAILABLE:  # pragma: no cover - codec-gated
                     # per-row boundary: real codecs decode one image at
@@ -203,9 +201,7 @@ def image_features(
     )
 
 
-def sample_frames(
-    df: DataFrame, *, every_n: int = 10, chunk_rows: int = UDF_CHUNK_ROWS
-) -> DataFrame:
+def sample_frames(df: DataFrame, *, every_n: int = 10) -> DataFrame:
     """Frame sampling over a VIDEO_SCHEMA table: one output row per
     sampled frame index. Real frame extraction is stubbed (no ffmpeg in
     the container); byte-range slicing stands in, preserving the
@@ -218,8 +214,8 @@ def sample_frames(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                chunk = pdf.iloc[lo : lo + chunk_rows]
+            for lo in range(0, len(pdf), UDF_CHUNK_ROWS):
+                chunk = pdf.iloc[lo : lo + UDF_CHUNK_ROWS]
                 payloads = chunk["bytes"].to_numpy(dtype=object)
                 n_frames = (
                     chunk["n_frames"].fillna(0).to_numpy(dtype=np.int64)

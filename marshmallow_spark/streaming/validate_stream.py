@@ -317,9 +317,7 @@ def duplicate_keys_in_window(
     )
 
 
-def audio_invariant_stream(
-    sdf: DataFrame, *, engine: str = "arrow"
-) -> DataFrame:
+def audio_invariant_stream(sdf: DataFrame) -> DataFrame:
     """The per-row audio invariant (decode + SNR vs reference +
     transcript equality) applied to a STREAMING clips source.
 
@@ -332,11 +330,11 @@ def audio_invariant_stream(
     """
     from ..functions.audio import audio_invariant_violations
 
-    return audio_invariant_violations(sdf, engine=engine)
+    return audio_invariant_violations(sdf)
 
 
 def audio_quality_stream(
-    sdf: DataFrame, *, time_col: str | None = None, chunk_rows: int = 0
+    sdf: DataFrame, *, time_col: str | None = None
 ) -> DataFrame:
     """Per-clip signal-quality metrics on a STREAMING clips source —
     the stateless Arrow kernel (functions/audio_quality.py
@@ -345,36 +343,22 @@ def audio_quality_stream(
 
     ``time_col`` names an event-time column to carry THROUGH the
     kernel (the metrics schema is fixed and would otherwise drop it):
-    the input batch's column is re-attached to the same-row-count
+    map_clips re-attaches the input batch's column to the same-row-count
     output batch, so the metrics can feed watermarked windowed
     aggregations downstream (:func:`windowed_audio_quality_psi`)."""
+    from ..functions.audio import CLIP_COLS, map_clips
     from ..functions.audio_quality import (
         QUALITY_OUT_SCHEMA,
         quality_metrics_arrow_batch,
     )
 
-    cols = ["clip_id", "bytes", "sr_hz", "codec"] + (
-        [time_col] if time_col else []
+    return map_clips(
+        sdf,
+        CLIP_COLS,
+        quality_metrics_arrow_batch,
+        QUALITY_OUT_SCHEMA,
+        passthrough=(time_col,) if time_col else (),
     )
-    pruned = sdf.select(*cols)
-    schema = QUALITY_OUT_SCHEMA + (
-        f", {time_col} timestamp" if time_col else ""
-    )
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            out = quality_metrics_arrow_batch(batch, chunk_rows=chunk_rows)
-            if time_col is not None:
-                idx = batch.schema.names.index(time_col)
-                out = pa.RecordBatch.from_arrays(
-                    list(out.columns) + [batch.column(idx)],
-                    names=list(out.schema.names) + [time_col],
-                )
-            yield out
-
-    return pruned.mapInArrow(run, schema=schema)
 
 
 def windowed_audio_quality_psi(
@@ -387,7 +371,6 @@ def windowed_audio_quality_psi(
     hi: float = 0.0,
     window_duration: str = "1 minute",
     watermark_delay: str = "10 minutes",
-    chunk_rows: int = 0,
 ) -> DataFrame:
     """Streaming drift over DECODED audio: per-event-time-window PSI
     of a signal-quality metric (default rms_dbfs) against a reference
@@ -397,9 +380,7 @@ def windowed_audio_quality_psi(
     diff. One stateless decode kernel feeding ONE watermarked fused
     histogram+PSI aggregation (windowed_psi's single-agg contract);
     state per open window = nbins longs. Output: (window, rows, psi)."""
-    metrics = audio_quality_stream(
-        sdf, time_col=time_col, chunk_rows=chunk_rows
-    )
+    metrics = audio_quality_stream(sdf, time_col=time_col)
     return windowed_psi(
         metrics,
         feature,

@@ -190,11 +190,15 @@ def test_normalize_gain_golden_vs_loop(spark):
     quiet = 0.01 * rng.standard_normal(2000)
     hot = np.clip(0.9 * np.sin(2 * np.pi * 50 * np.arange(3000) / 8000), -1, 1)
     silent = np.zeros(500)
+    # 500k random samples: a gain applied at float32 precision flips
+    # dozens of output LSBs here (the oracle below applies it in float64)
+    big = rng.uniform(-0.9, 0.9, 500_000)
     rows = [
         ("quiet", np.clip(np.rint(quiet * 32768.0), -32768, 32767).astype("<i2").tobytes(), 8000, "pcm16"),
         ("hot", np.clip(np.rint(hot * 32768.0), -32768, 32767).astype("<i2").tobytes(), 8000, "pcm16"),
         ("silent", silent.astype("<i2").tobytes(), 8000, "pcm16"),
         ("bad", b"\x01", 8000, "mp3"),
+        ("big", np.clip(np.rint(big * 32768.0), -32768, 32767).astype("<i2").tobytes(), 8000, "pcm16"),
     ]
     df = spark.createDataFrame(
         rows, "clip_id string, bytes binary, sr_hz int, codec string"

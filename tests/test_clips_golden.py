@@ -10,6 +10,9 @@ docstring) and diff it against each query's output:
 - clips_full_suite: exact 4-tuple multiset across all four checks
   (SNR messages matched with the independently recomputed SNR value)
 - clips_audio_invariant: exact multiset, same SNR handling
+- audio_invariant_violations over the UNFILTERED corpus: exact multiset,
+  covering the kernel's own gating (unknown codec, mismatched sr_hz,
+  non-positive dur_ms) that the query's pre-filter hides
 - clips_verdicts: exact per-bucket rollup rows derived from the golden
   per-clip violation counts
 
@@ -41,6 +44,7 @@ MSG_SR = "Must be one of: 8000, 16000, 22050, 44100."
 MSG_DUR = "Must be greater than or equal to 1 and less than or equal to 600000."
 MSG_NULL = "Field may not be null."
 MSG_TX = "Transcript does not match reference."
+MSG_CODEC = "Must be one of: pcm16, ulaw, alaw."
 SNR_RE = re.compile(
     r"^Audio does not match reference: SNR (-?\d+\.\d) dB < 30 dB\.$"
 )
@@ -186,6 +190,37 @@ def _expected_audio(s):
     return exact, snr_rows
 
 
+def _expected_invariant_unfiltered(s):
+    """Exact rows / (clip_id, snr) of the invariant kernel over every
+    row: an unknown codec is a codec violation; a known codec with
+    dur_ms <= 0 is skipped; otherwise a payload whose length is not
+    n_samples(sr_hz, dur_ms) * width (truncated, or generated at a
+    different sr_hz than the row claims) is a truncation violation, and
+    a full-length corrupted payload an SNR violation. Transcripts are
+    checked on every row."""
+    known = np.array([c in audio.KNOWN_CODECS for c in s["codec_out"]])
+    exact, snr_rows = [], {}
+    for i in np.flatnonzero(~known):
+        exact.append((s["clip_id"][i], "codec", MSG_CODEC))
+    for i in np.flatnonzero(known & (s["dur_out"] > 0)):
+        w = audio.SAMPLE_WIDTH[s["codec_out"][i]]
+        expected = int((s["sr_out"][i] * s["dur_out"][i]) // 1000) * w
+        got = len(_payload_for(i, s))
+        if got != expected:
+            exact.append(
+                (
+                    s["clip_id"][i],
+                    "bytes",
+                    f"Truncated audio payload: expected {expected} bytes, got {got}.",
+                )
+            )
+        elif s["corrupt"][i]:
+            snr_rows[s["clip_id"][i]] = _snr_for(i, s)
+    for i in np.flatnonzero(s["bad_tx"] & ~s["null_tx"]):
+        exact.append((s["clip_id"][i], "transcript", MSG_TX))
+    return exact, snr_rows
+
+
 def _split_snr(rows: list[tuple]) -> tuple[list[tuple], dict[str, float]]:
     """Partition actual (clip_id, field, message) rows into exact rows
     and SNR rows (clip_id -> parsed dB)."""
@@ -222,6 +257,30 @@ def test_audio_invariant_exact_set(spark, sf_dir, sched):
     exp_exact, exp_snr = _expected_audio(sched)
     assert sorted(got_exact) == sorted(exp_exact)
     _check_snr(got_snr, exp_snr)
+
+
+def test_audio_invariant_unfiltered_exact_set(spark, sched):
+    from marshmallow_spark.sources.synth import synth_clips
+
+    df = synth_clips(spark, N_CLIPS, num_partitions=8)
+    rows = [
+        tuple(r)
+        for r in audio.audio_invariant_violations(df)
+        .select("clip_id", "field", "message")
+        .collect()
+    ]
+    got_exact, got_snr = _split_snr(rows)
+    exp_exact, exp_snr = _expected_invariant_unfiltered(sched)
+    assert sorted(got_exact) == sorted(exp_exact)
+    _check_snr(got_snr, exp_snr)
+    # the corpus exercises every gate the pre-filtered query hides
+    known = np.array([c in audio.KNOWN_CODECS for c in sched["codec_out"]])
+    bad_sr = set(sched["clip_id"][known & (sched["sr_out"] == 12345) & (sched["dur_out"] > 0)])
+    bad_dur = set(sched["clip_id"][known & (sched["dur_out"] <= 0)])
+    assert bad_sr and bad_dur
+    assert any(r[2] == MSG_CODEC for r in got_exact)
+    assert bad_sr <= {r[0] for r in got_exact if r[2].startswith("Truncated")}
+    assert not bad_dur & {r[0] for r in rows if r[1] == "bytes"}
 
 
 def test_full_suite_exact_set(spark, sf_dir, sched):
