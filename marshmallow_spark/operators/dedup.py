@@ -70,10 +70,10 @@ def _packed_shingle_arr(text_col: str, k: int):
     NEGATIVE range (-(cp0<<21 | cp1) - 1), disjoint from every 3-char
     value. The only collision class is text containing NUL characters
     (codepoint 0 is also ``ascii('')``); k != 3 falls back to the
-    string arrays. Returns None when packing does not apply."""
-    if k != 3:
-        return None
+    distinct string-shingle arrays."""
     arr = f"array_distinct({shingle_expr(text_col, k)})"
+    if k != 3:
+        return F.expr(arr)
     return F.expr(
         f"transform({arr}, g -> if(length(g) = 3, "
         "(bigint(ascii(substring(g, 1, 1))) * 4398046511104) + "
@@ -96,6 +96,50 @@ def _intersect_size_once(a: str, b: str):
     analog of guide §4.4's ``asNondeterministic`` fix for duplicated
     UDF evaluation; the emitted values are bit-identical."""
     return F.size(F.array_intersect(a, b)) + (F.rand() * 0).cast("int")
+
+
+def _verify_candidates(
+    cand: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
+    a: str,
+    b: str,
+    id_col: str,
+    text_col: str,
+    *,
+    k: int,
+    min_jaccard: float,
+) -> DataFrame:
+    """(a, b, inter, uni) for the candidate pairs ``cand`` (columns
+    ``a``, ``b``) whose exact k-shingle Jaccard inter/uni is at least
+    ``min_jaccard`` and whose docs share at least one shingle.
+
+    ``a_docs`` / ``b_docs`` are the (id, text) frames the two columns
+    key into, already :func:`_spread`: the per-doc shingle arrays are
+    computed inside the join builds, so off an under-partitioned scan
+    their construction would run single-threaded (guide §2.5). Each
+    side's DISTINCT shingle array (int64-packed when k == 3 — see
+    :func:`_packed_shingle_arr`) is attached with one keyed join and
+    the intersection is a per-pair ``array_intersect`` projection — all
+    JVM-side, no explode, no aggregation, no post-join shuffle."""
+    arr = _packed_shingle_arr(text_col, k)
+
+    def side(docs: DataFrame, key: str, g: str, sz: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(key), arr.alias(g), F.size(arr).alias(sz)
+        )
+
+    return (
+        cand.join(side(a_docs, a, "_ga", "sza"), a)
+        .join(side(b_docs, b, "_gb", "szb"), b)
+        .withColumn("inter", _intersect_size_once("_ga", "_gb"))
+        .withColumn("uni", F.col("sza") + F.col("szb") - F.col("inter"))
+        .where(
+            (F.col("inter") > 0)
+            & (F.col("inter") >= F.col("uni") * F.lit(min_jaccard))
+        )
+        .select(a, b, "inter", "uni")
+    )
 
 
 def exact_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -166,10 +210,14 @@ def exact_dedup(
 
 
 def shingle_expr(text_col: str, k: int = 3) -> str:
-    """SQL expr producing the array of character k-shingles."""
+    """SQL expr producing the array of character k-shingles; NULL for
+    NULL text. (``greatest`` skips NULLs, so without the guard NULL text
+    would yield ``[NULL]`` — a one-shingle array that intersects every
+    other NULL doc's at Jaccard 1.)"""
     return (
+        f"if({text_col} is null, null, "
         f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)), "
-        f"i -> substring({text_col}, i, {k}))"
+        f"i -> substring({text_col}, i, {k})))"
     )
 
 
@@ -238,9 +286,7 @@ def minhash_signatures(
     # file) would run it in one task (guide §2.5 input skew)
     exploded = _spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col),
-        F.explode_outer(
-            F.when(F.col(text_col).isNotNull(), F.expr(grams))
-        ).alias("g"),
+        F.explode_outer(F.expr(grams)).alias("g"),
     )
     digests = [F.md5("g")] + [
         F.md5(F.concat(F.lit(str(i)), F.col("g"))) for i in range(1, groups)
@@ -260,125 +306,53 @@ def minhash_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    band_cols: list[str],
-    *,
-    salt_threshold: int | None = None,
-    num_salts: int = 8,
-) -> DataFrame:
-    """Docs sharing a full band signature -> candidate pairs (a < b).
-
-    One self-join keyed on the band tuple; at scale the groupBy-join is
-    shuffled on the band hash, and the id ordering keeps each pair
-    emitted once.
-
-    A degenerate band (e.g. every empty-text doc hashes identically)
-    puts its whole posting list on ONE reducer — the pair count is
-    irreducibly quadratic, but the straggler is fixable: pass
-    ``salt_threshold`` to split buckets larger than it across
-    ``num_salts`` sub-keys. The a-side keeps one salt (pmod of its id
-    hash); the b-side is replicated once per salt, so every (a, b) pair
-    still meets exactly once while the hot bucket fans out over
-    ``num_salts`` partitions. Output is identical with or without
-    salting.
-
-    Plan shape (both paths): the signature projection feeds ONE
-    repartition-by-band exchange, and BOTH self-join sides hang off it
-    via the aliased-subtree trick (see similarity.lsh_topk) — the
-    round-2 formulation detected hot keys with a separate broadcast
-    aggregate whose four join branches re-evaluated the (md5-heavy)
-    signature subtree ~5x per action. Bucket sizes now come from a
-    window count on the already-shuffled frame (no extra shuffle, no
-    recompute), and the salted join pays one further small shuffle of
-    (id, band, salt) tuples only.
-    """
-    # Explicit partition count on the band-key exchanges: AQE coalesces
-    # post-shuffle partitions by SIZE (advisoryPartitionSizeInBytes),
-    # but the self-join downstream FANS OUT (pair volume >> key volume)
-    # — a 20k-row signature exchange coalesced to one partition runs
-    # the multi-million-pair join on one core (measured 2x the stage
-    # wall at sf0.1). Derived from defaultParallelism, not a constant:
-    # scales with the cluster, and at real shuffle sizes the explicit
-    # count matches what AQE would pick anyway.
-    n_parts = _parallelism(signatures) * 2
-    if salt_threshold is None:
-        keyed = signatures.repartition(n_parts, *[F.col(c) for c in band_cols])
-        left = keyed.alias("_lsh_a")
-        right = keyed.alias("_lsh_b")
-        cond = F.lit(True)
-        for c in band_cols:
-            cond = cond & (F.col(f"_lsh_a.{c}") == F.col(f"_lsh_b.{c}"))
-        return (
-            left.join(right, cond)
-            .where(F.col(f"_lsh_a.{id_col}") < F.col(f"_lsh_b.{id_col}"))
-            .select(
-                F.col(f"_lsh_a.{id_col}").alias("a"),
-                F.col(f"_lsh_b.{id_col}").alias("b"),
-            )
-        )
-
-    from pyspark.sql import Window
-
-    sized = (
-        signatures.repartition(n_parts, *[F.col(c) for c in band_cols])
-        .withColumn(
-            "_n", F.count(F.lit(1)).over(Window.partitionBy(*band_cols))
-        )
-    )
-    hot = F.col("_n") > salt_threshold
-    a_side = sized.select(
-        F.col(id_col).alias("a"),
-        *band_cols,
-        F.when(hot, F.pmod(F.hash(id_col), F.lit(num_salts)))
-        .otherwise(F.lit(0))
-        .alias("_salt"),
-    )
-    b_side = sized.select(
-        F.col(id_col).alias("b"),
-        *band_cols,
-        F.explode(
-            F.when(hot, F.sequence(F.lit(0), F.lit(num_salts - 1))).otherwise(
-                F.array(F.lit(0))
-            )
-        ).alias("_salt"),
-    )
-    return (
-        a_side.join(b_side, on=band_cols + ["_salt"], how="inner")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-
-
 def _banded_keys(
-    signatures: DataFrame, id_col: str, bands: list[list[str]]
+    signatures: DataFrame, id_col: str, num_bands: int, rows_per_band: int
 ) -> DataFrame:
-    """(_id, bi, bk): one row per (doc, band) where bk is the array of
-    that band's hash values — ONE projection explodes all bands (the
-    simhash_near_pairs single-exchange block-key shape)."""
+    """(_id, bi, bk) repartitioned on (bi, bk): one row per (doc, band)
+    where bk is the array of band bi's hash values h{bi*r}..h{bi*r+r-1}
+    — ONE projection explodes all bands (the simhash_near_pairs
+    single-exchange block-key shape).
+
+    Rows with a NULL id or a NULL hash in their band are dropped: Spark
+    evaluates ``array(NULL) = array(NULL)`` as true, so every NULL-text
+    doc (whose signature is all-NULL) would otherwise pair with every
+    other — C(k, 2) candidates that verification only discards — where
+    SQL column equality matches NULL to nothing. The filter sits BELOW
+    the exchange and is the same for every consumer, so both self-join
+    sides still hang off that one exchange (a NULL-id filter inferred
+    on one join side only would make the subtrees differ and cost the
+    ReusedExchange).
+
+    The partition count is EXPLICIT: AQE coalesces post-shuffle
+    partitions by SIZE (advisoryPartitionSizeInBytes), but the
+    self-join downstream FANS OUT (pair volume >> key volume) — a
+    20k-row key exchange coalesced to one partition runs the
+    multi-million-pair join on one core (measured 2x the stage wall at
+    sf0.1). Derived from defaultParallelism, not a constant: at real
+    shuffle sizes it matches what AQE would pick anyway."""
     blk = F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(b).alias("bi"),
-                    F.array(*[F.col(c) for c in bands[b]]).alias("bk"),
+                    F.array(
+                        *[
+                            F.col(f"h{b * rows_per_band + r}")
+                            for r in range(rows_per_band)
+                        ]
+                    ).alias("bk"),
                 )
-                for b in range(len(bands))
+                for b in range(num_bands)
             ]
         )
     ).alias("_blk")
-    return signatures.select(F.col(id_col).alias("_id"), blk).select(
-        "_id", F.col("_blk.bi").alias("bi"), F.col("_blk.bk").alias("bk")
+    keys = (
+        signatures.select(F.col(id_col).alias("_id"), blk)
+        .select("_id", F.col("_blk.bi").alias("bi"), F.col("_blk.bk").alias("bk"))
+        .where(F.col("_id").isNotNull() & F.forall("bk", lambda h: h.isNotNull()))
     )
-
-
-def _keyed_repartition(keys: DataFrame, cols: list[str]) -> DataFrame:
-    """Band-key repartition with an EXPLICIT partition count (see the
-    AQE fan-out note in lsh_candidate_pairs): the downstream self-join
-    multiplies rows, so size-based coalescing of this small exchange
-    starves the join of parallelism."""
-    return keys.repartition(_parallelism(keys) * 2, *[F.col(c) for c in cols])
+    return keys.repartition(_parallelism(keys) * 2, "bi", "bk")
 
 
 def lsh_banded_pairs(
@@ -387,14 +361,14 @@ def lsh_banded_pairs(
     *,
     num_bands: int,
     rows_per_band: int,
-    hash_cols: list[str] | None = None,
     salt_threshold: int | None = None,
     num_salts: int = 8,
     mode: str = "pairs",
 ) -> DataFrame:
     """Multi-band (b x r) MinHash LSH candidates: docs agreeing on ALL
     ``rows_per_band`` hashes of AT LEAST ONE of the ``num_bands`` bands
-    -> (a, b) pairs, each emitted once.
+    -> (a, b) pairs with a < b, each emitted once. ``num_bands=1`` is
+    the plain single-band self-join on h0..h{r-1}.
 
     ``mode="star"`` emits only the SPANNING star edges of each bucket —
     (bucket-min id, member id) — instead of all C(m, 2) member pairs.
@@ -421,106 +395,85 @@ def lsh_banded_pairs(
     silently drops most borderline near-dups its own verifier would
     accept).
 
-    Plan shape (the simhash_near_pairs single-exchange pattern,
-    dedup.py simhash_near_pairs): ONE projection explodes each doc into
-    ``num_bands`` (band_index, band_key) rows where band_key is the
-    array of that band's r hash values; ONE repartition(bi, bk)
-    exchange feeds BOTH self-join sides (aliased subtree ->
-    ReusedExchange, enforced by tests/test_plan_audit.py), and pairs
-    matching in several bands collapse through the final distinct. The
+    Plan shape (the simhash_near_pairs single-exchange pattern):
+    :func:`_banded_keys` explodes each doc into ``num_bands``
+    (band_index, band_key) rows in ONE projection; ONE repartition(bi,
+    bk) exchange feeds BOTH self-join sides (aliased subtree ->
+    ReusedExchange, enforced by tests/test_plan_audit.py). The
     signature projection — ceil(b*r/4) md5s per shingle — runs once.
+    Pairs matching in several bands collapse through a final distinct;
+    with one band every pair meets exactly once, so it is skipped.
 
-    ``salt_threshold`` splits degenerate buckets exactly as in
-    :func:`lsh_candidate_pairs`: bucket sizes come from a window count
-    on the already-shuffled frame, the a-side keeps one salt, the
-    b-side replicates across ``num_salts``, so every pair still meets
-    exactly once per band. Output is identical with or without salting.
+    A degenerate band (e.g. every empty-text doc hashes identically)
+    puts its whole posting list on ONE reducer — the pair count is
+    irreducibly quadratic, but the straggler is fixable: pass
+    ``salt_threshold`` to split buckets larger than it across
+    ``num_salts`` sub-keys. Bucket sizes come from a window count on
+    the already-shuffled frame (no extra shuffle, no recompute); the
+    a-side keeps one salt (pmod of its id hash), the b-side is
+    replicated once per salt, so every pair still meets exactly once
+    per band while the hot bucket fans out over ``num_salts``
+    partitions. Output is identical with or without salting.
     """
-    n = num_bands * rows_per_band
-    hash_cols = hash_cols or [f"h{j}" for j in range(n)]
-    if len(hash_cols) < n:
-        raise ValueError(
-            f"need {n} hash columns for {num_bands} bands x "
-            f"{rows_per_band} rows, got {len(hash_cols)}"
-        )
-    bands = [
-        hash_cols[b * rows_per_band : (b + 1) * rows_per_band]
-        for b in range(num_bands)
-    ]
-    if mode == "star":
-        # NULL ids are dropped BELOW the shared exchange: the emit
-        # join's `_id != _m` condition infers isnotnull(_id) on the
-        # probe side only, and an asymmetric pushed filter makes the
-        # two subtrees differ — Catalyst then re-derives the whole
-        # signature projection instead of reusing the exchange (the
-        # exact plan drift the round-2 verdict flagged on q32).
-        # Filtering both sides identically keeps ONE scan + ONE
-        # exchange; min() ignores nulls, so bucket minima are
-        # unchanged.
-        signatures = signatures.where(F.col(id_col).isNotNull())
-    keyed = _keyed_repartition(
-        _banded_keys(signatures, id_col, bands), ["bi", "bk"]
-    )
+    if mode not in ("pairs", "star"):
+        raise ValueError(f"unknown lsh_banded_pairs mode: {mode!r}")
+    keyed = _banded_keys(signatures, id_col, num_bands, rows_per_band)
     if mode == "star":
         # bucket-min via groupBy (map-side partial agg — hot buckets
         # never concentrate), then the emit join hangs both sides off
         # the SAME (bi, bk) exchange (aliased subtree -> ReusedExchange)
-        left = keyed.alias("_str_l")
         mins = (
             keyed.alias("_str_r")
             .groupBy("bi", "bk")
             .agg(F.min("_id").alias("_m"))
         )
-        return (
-            left.join(mins, ["bi", "bk"])
+        out = (
+            keyed.alias("_str_l")
+            .join(mins, ["bi", "bk"])
             .where(F.col("_id") != F.col("_m"))
             .select(F.col("_m").alias("a"), F.col("_id").alias("b"))
-            .distinct()
         )
-    if mode != "pairs":
-        raise ValueError(f"unknown lsh_banded_pairs mode: {mode!r}")
-    if salt_threshold is None:
+    elif salt_threshold is None:
         left = keyed.alias("_bnd_l")
         right = keyed.alias("_bnd_r")
         lc = lambda name: F.col(f"_bnd_l.{name}")  # noqa: E731
         rc = lambda name: F.col(f"_bnd_r.{name}")  # noqa: E731
-        return (
+        out = (
             left.join(right, (lc("bi") == rc("bi")) & (lc("bk") == rc("bk")))
             .where(lc("_id") < rc("_id"))
             .select(lc("_id").alias("a"), rc("_id").alias("b"))
-            .distinct()
         )
+    else:
+        from pyspark.sql import Window
 
-    from pyspark.sql import Window
-
-    sized = keyed.withColumn(
-        "_n", F.count(F.lit(1)).over(Window.partitionBy("bi", "bk"))
-    )
-    hot = F.col("_n") > salt_threshold
-    a_side = sized.select(
-        F.col("_id").alias("a"),
-        "bi",
-        "bk",
-        F.when(hot, F.pmod(F.hash("_id"), F.lit(num_salts)))
-        .otherwise(F.lit(0))
-        .alias("_salt"),
-    )
-    b_side = sized.select(
-        F.col("_id").alias("b"),
-        "bi",
-        "bk",
-        F.explode(
-            F.when(hot, F.sequence(F.lit(0), F.lit(num_salts - 1))).otherwise(
-                F.array(F.lit(0))
-            )
-        ).alias("_salt"),
-    )
-    return (
-        a_side.join(b_side, on=["bi", "bk", "_salt"], how="inner")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+        sized = keyed.withColumn(
+            "_n", F.count(F.lit(1)).over(Window.partitionBy("bi", "bk"))
+        )
+        hot = F.col("_n") > salt_threshold
+        a_side = sized.select(
+            F.col("_id").alias("a"),
+            "bi",
+            "bk",
+            F.when(hot, F.pmod(F.hash("_id"), F.lit(num_salts)))
+            .otherwise(F.lit(0))
+            .alias("_salt"),
+        )
+        b_side = sized.select(
+            F.col("_id").alias("b"),
+            "bi",
+            "bk",
+            F.explode(
+                F.when(hot, F.sequence(F.lit(0), F.lit(num_salts - 1))).otherwise(
+                    F.array(F.lit(0))
+                )
+            ).alias("_salt"),
+        )
+        out = (
+            a_side.join(b_side, on=["bi", "bk", "_salt"], how="inner")
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b")
+        )
+    return out.distinct() if num_bands > 1 else out
 
 
 def ngram_jaccard_pairs(
@@ -540,16 +493,18 @@ def ngram_jaccard_pairs(
 
     ``assume_distinct_candidates=True`` skips the defensive
     ``candidates.distinct()`` — one full exchange of the pair list —
-    when the caller guarantees uniqueness (every LSH producer here
-    emits each pair exactly once: the banded modes end in a distinct,
-    the single-band join meets each pair once per its key). Duplicate
-    candidates under the flag would duplicate output rows, so it stays
-    opt-in.
+    when the caller guarantees uniqueness. :func:`lsh_banded_pairs`
+    over :func:`minhash_signatures` output guarantees it: several bands
+    end in a distinct, and one band meets each pair once. That rests on
+    a PRECONDITION: ``id_col`` is unique per row of the signature frame
+    (minhash_signatures emits one row per distinct id) and of ``df``.
+    A doc_id carried by two signature rows pairs once per row, and
+    duplicate candidates under the flag duplicate output rows, so the
+    flag stays opt-in.
 
-    With ``candidates`` (e.g. from LSH banding) each side's DISTINCT
-    shingle array is attached with one keyed join and the intersection
-    is a per-pair ``array_intersect`` projection — all JVM-side, no
-    explode, no aggregation. The round-2 formulation joined the
+    With ``candidates`` (e.g. from LSH banding) only those pairs are
+    verified, by per-pair shingle-array intersection (see
+    :func:`_verify_candidates`). The round-2 formulation joined the
     exploded shingle index to the pair list; that was already O(p) per
     stop-shingle, but it shuffled |pairs| x |shingles-per-doc| rows
     through a groupBy (~130M rows for 430k pairs of 300-char docs —
@@ -566,39 +521,13 @@ def ngram_jaccard_pairs(
     or pass candidates).
     """
     if candidates is not None:
-        # int64-packed shingles when k == 3 (bijective — identical
-        # inter/uni counts, ~2x cheaper per-pair intersect); string
-        # arrays otherwise
-        arr = _packed_shingle_arr(text_col, k)
-        if arr is None:
-            arr = F.array_distinct(F.expr(shingle_expr(text_col, k)))
-        # _spread: the per-doc shingle arrays are computed inside the
-        # broadcast builds — off an under-partitioned scan both sides'
-        # array construction runs single-threaded (guide §2.5)
-        spread = _spread(df.select(F.col(id_col), F.col(text_col)))
-        ga = spread.select(
-            F.col(id_col).alias("a"),
-            arr.alias("_ga"),
-            F.size(arr).alias("sza"),
-        )
-        gb = spread.select(
-            F.col(id_col).alias("b"),
-            arr.alias("_gb"),
-            F.size(arr).alias("szb"),
-        )
         cand = candidates.select("a", "b")
         if not assume_distinct_candidates:
             cand = cand.distinct()
-        return (
-            cand.join(ga, "a")
-            .join(gb, "b")
-            .withColumn("inter", _intersect_size_once("_ga", "_gb"))
-            .withColumn("uni", F.col("sza") + F.col("szb") - F.col("inter"))
-            .where(
-                (F.col("inter") > 0)
-                & (F.col("inter") >= F.col("uni") * F.lit(min_jaccard))
-            )
-            .select("a", "b", "inter", "uni")
+        spread = _spread(df.select(F.col(id_col), F.col(text_col)))
+        return _verify_candidates(
+            cand, spread, spread, "a", "b", id_col, text_col,
+            k=k, min_jaccard=min_jaccard,
         )
 
     # Inverted-index path. Per-doc sizes come from a NARROW projection
@@ -677,13 +606,9 @@ def incremental_dedup_pairs(
     serves any smaller (b, r) configuration. Omitted, signatures are
     computed from ``corpus`` in-plan (identical output, test-pinned)."""
     n = num_bands * rows_per_band
-    bands = [
-        [f"h{b * rows_per_band + r}" for r in range(rows_per_band)]
-        for b in range(num_bands)
-    ]
 
     def keys(sigs: DataFrame) -> DataFrame:
-        return _keyed_repartition(_banded_keys(sigs, id_col, bands), ["bi", "bk"])
+        return _banded_keys(sigs, id_col, num_bands, rows_per_band)
 
     corp_sigs = corpus_signatures
     if corp_sigs is None:
@@ -703,31 +628,16 @@ def incremental_dedup_pairs(
         )
         .distinct()
     )
-    # int64-packed shingles when k == 3 (see _packed_shingle_arr)
-    arr = _packed_shingle_arr(text_col, k)
-    if arr is None:
-        arr = F.array_distinct(F.expr(shingle_expr(text_col, k)))
-    # _spread both verify sides: see ngram_jaccard_pairs (guide §2.5)
-    ga = _spread(increment.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col).alias("new_id"),
-        arr.alias("_ga"),
-        F.size(arr).alias("sza"),
-    )
-    gb = _spread(corpus.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col).alias("corpus_id"),
-        arr.alias("_gb"),
-        F.size(arr).alias("szb"),
-    )
-    return (
-        cand.join(ga, "new_id")
-        .join(gb, "corpus_id")
-        .withColumn("inter", _intersect_size_once("_ga", "_gb"))
-        .withColumn("uni", F.col("sza") + F.col("szb") - F.col("inter"))
-        .where(
-            (F.col("inter") > 0)
-            & (F.col("inter") >= F.col("uni") * F.lit(min_jaccard))
-        )
-        .select("new_id", "corpus_id", "inter", "uni")
+    return _verify_candidates(
+        cand,
+        _spread(increment.select(F.col(id_col), F.col(text_col))),
+        _spread(corpus.select(F.col(id_col), F.col(text_col))),
+        "new_id",
+        "corpus_id",
+        id_col,
+        text_col,
+        k=k,
+        min_jaccard=min_jaccard,
     )
 
 
@@ -846,19 +756,24 @@ def minhash_dedup_pipeline(
     text_col: str = "text",
     *,
     num_hashes: int = 16,
-    num_bands: int | None = 4,
-    band_cols: list[str] | None = None,
+    num_bands: int = 4,
     k: int = 3,
     min_jaccard: float = 0.5,
     salt_threshold: int | None = 64,
     num_salts: int = 8,
-    use_star: bool = True,
     candidate_strategy: str = "pairs",
 ) -> DataFrame:
     """End-to-end near-dup clustering: MinHash signatures -> salted
     multi-band LSH candidates -> exact-Jaccard verification of
-    candidates only (never all pairs) -> connected-component cluster
-    assignment ((id, comp) rows).
+    candidates only (never all pairs) -> star connected-component
+    cluster assignment ((id, comp) rows).
+
+    CONTRACT: ``id_col`` must be unique per row of ``df``. The verify
+    step runs with ``assume_distinct_candidates=True`` and the
+    clustering with ``assume_normalized=True`` (see
+    :func:`ngram_jaccard_pairs` and :func:`connected_components_star`),
+    and both flags rest on each candidate pair being emitted once.
+    Dedupe ids upstream (e.g. ``exact_dedup`` on the key) otherwise.
 
     ``candidate_strategy="star"`` swaps the all-pairs banded candidates
     for each bucket's spanning star edges (see
@@ -874,8 +789,6 @@ def minhash_dedup_pipeline(
     :func:`lsh_banded_pairs`; the r3 single-band default surfaced a
     J = 0.5 pair with probability J^4 ~ 6%, the banded default finds
     1 - (1 - J^4)^4 ~ 23% and proportionally more above the threshold).
-    Pass ``num_bands=None`` with explicit ``band_cols`` for the legacy
-    single-band shape.
 
     The candidate and verified-pair frames are persisted EAGERLY at the
     stage boundaries: each is consumed by a multi-reference downstream
@@ -887,32 +800,22 @@ def minhash_dedup_pipeline(
     production run would checkpoint for resume (plans/checkpoint.py);
     both frames are violation-rate-sized, not corpus-sized.
     """
+    if num_hashes % num_bands:
+        raise ValueError(
+            f"num_hashes={num_hashes} not divisible by num_bands={num_bands}"
+        )
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes=num_hashes, k=k
     )
-    if num_bands is not None:
-        if num_hashes % num_bands:
-            raise ValueError(
-                f"num_hashes={num_hashes} not divisible by num_bands={num_bands}"
-            )
-        cand = lsh_banded_pairs(
-            sigs,
-            id_col,
-            num_bands=num_bands,
-            rows_per_band=num_hashes // num_bands,
-            salt_threshold=salt_threshold,
-            num_salts=num_salts,
-            mode=candidate_strategy,
-        ).persist()
-    else:
-        band_cols = band_cols or [f"h{j}" for j in range(num_hashes)]
-        cand = lsh_candidate_pairs(
-            sigs,
-            id_col,
-            band_cols,
-            salt_threshold=salt_threshold,
-            num_salts=num_salts,
-        ).persist()
+    cand = lsh_banded_pairs(
+        sigs,
+        id_col,
+        num_bands=num_bands,
+        rows_per_band=num_hashes // num_bands,
+        salt_threshold=salt_threshold,
+        num_salts=num_salts,
+        mode=candidate_strategy,
+    ).persist()
     cand.count()
     verified = ngram_jaccard_pairs(
         df,
@@ -921,20 +824,15 @@ def minhash_dedup_pipeline(
         k=k,
         candidates=cand,
         min_jaccard=min_jaccard,
-        # both candidate producers emit each pair exactly once (see
+        # lsh_banded_pairs emits each pair exactly once (see
         # ngram_jaccard_pairs) — skip the defensive pair-list exchange
         assume_distinct_candidates=True,
     ).persist()
     verified.count()
-    if use_star:
-        # verified pairs are unique with a < b strict (one row per
-        # candidate pair), i.e. already an oriented loop-free edge
-        # set — skip the normalize distinct's exchange too
-        out = connected_components_star(
-            verified, "a", "b", assume_normalized=True
-        )
-    else:
-        out = connected_components(verified, "a", "b")
+    # verified pairs are unique with a < b strict (one row per
+    # candidate pair), i.e. already an oriented loop-free edge set —
+    # skip the normalize distinct's exchange too
+    out = connected_components_star(verified, "a", "b", assume_normalized=True)
     # the cluster step eagerly materialized its own edge copy and its
     # label rows live in localCheckpoint storage, so the returned frame
     # no longer references these caches — release them now
@@ -951,49 +849,47 @@ def connected_components_star(
     max_iter: int = 25,
     assume_normalized: bool = False,
 ) -> DataFrame:
-    """(id, comp) via alternating large-star / small-star (Kiveris et
-    al., "Connected Components in MapReduce and Beyond") — the
-    GIANT-component-safe variant of :func:`connected_components`.
+    """Duplicate-cluster assignment: (id, comp) where comp is the
+    minimum id reachable through the (undirected) pair graph — the
+    transitive-closure step that turns near-dup PAIRS into dedup GROUPS
+    (keep one doc per comp). Nodes that appear only in self-loops are
+    not in the output.
 
-    Plain label propagation needs O(diameter) rounds and funnels every
-    node of a giant component through the min-label's reducer; the
-    star operations contract the graph in O(log^2 n) rounds with
-    per-round work proportional to the edge list:
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Plain label
+    propagation needs O(diameter) rounds and funnels every node of a
+    giant component through the min-label's reducer; the star
+    operations contract the graph in O(log^2 n) rounds with per-round
+    work proportional to the edge list:
 
     - large-star: for each node u, connect every STRICTLY LARGER
       neighbor to u's minimum neighbor (incl. u);
     - small-star: for each node u, connect every not-larger neighbor
       to the minimum.
 
-    Each round is two map-side projections + one groupBy(min) per
-    star — no join grows beyond the edge list. Convergence: the edge
-    set stops changing; every edge then points directly at its
-    component's minimum id.
+    Each round is two map-side projections + one window min per star —
+    no join grows beyond the edge list. Convergence: the edge set stops
+    changing; every edge then points directly at its component's
+    minimum id.
     """
     # normalize: undirected, no self-loops, u > v orientation not yet
     # required — the star ops re-orient every round.
     # ``assume_normalized=True`` (opt-in): the caller guarantees the
-    # pair list is already distinct and loop-free (e.g. one verified
-    # row per candidate pair with a < b strict), so the defensive
-    # distinct — a full exchange of the edge list — is skipped; only
-    # the cheap orientation projection remains. Duplicate or self-loop
-    # input under the flag would only inflate round volume, never
-    # change the fixpoint, but the flag stays opt-in to keep the
-    # general contract obvious.
-    edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-    if assume_normalized:
-        edges = edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).persist()
-    else:
-        edges = (
-            edges.where(F.col("u") != F.col("v"))
-            .select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .distinct()
-            .persist()
-        )
+    # pair list is already distinct (e.g. one verified row per
+    # candidate pair with a < b strict), so the defensive distinct — a
+    # full exchange of the edge list — is skipped. The narrow self-loop
+    # filter stays either way: it costs no exchange, and a loop leaking
+    # into round 0 would only inflate its volume. Duplicate input under
+    # the flag likewise inflates round volume without changing the
+    # fixpoint.
+    edges = (
+        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    )
+    if not assume_normalized:
+        edges = edges.distinct()
+    edges = edges.persist()
 
     def _set_fingerprint(e: DataFrame):
         """(count, xor-of-xxhash64) over the orientation-normalized
@@ -1111,78 +1007,6 @@ def connected_components_star(
     out = members.unionByName(roots).distinct()
     edges.unpersist()
     return out
-
-
-def connected_components(
-    pairs: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Duplicate-cluster assignment: (id, comp) where comp is the
-    minimum id reachable through the (undirected) candidate-pair graph
-    — the transitive-closure step that turns near-dup PAIRS into
-    dedup GROUPS (keep one doc per comp).
-
-    Label propagation: each round every node adopts the min label among
-    itself and its neighbors; converges in O(graph diameter) rounds.
-    Dedup graphs are overwhelmingly tiny cliques/chains, so a handful
-    of rounds suffices. Each round is one shuffle (join + groupBy min).
-
-    Scale notes (10^12 rows): diameter stays small for near-dup graphs,
-    but a single giant component makes the min-label hot — the known
-    remedy is the alternating large-star/small-star formulation
-    (Kiveris et al., "Connected Components in MapReduce"), which this
-    driver loop can be swapped to without changing the contract. Each
-    round's frontier is persisted and the loop exits on a fixpoint
-    probe (limit-1 count, cheap).
-    """
-    edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = edges.persist()
-    # eager materialization — see connected_components_star: concurrent
-    # first-round stages would otherwise recompute the upstream pairs
-    # pipeline once per reference
-    edges.count()
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "comp", F.col("id")
-    )
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        # localCheckpoint (not persist): each round references `labels`
-        # twice (propagation join + fixpoint probe), so lineage doubles
-        # per round — a deep graph (long chain) would OOM the driver on
-        # plan stringification around round ~20 without truncation
-        new = (
-            labels.join(prop, labels.id == prop.src, "left")
-            .select(
-                labels.id,
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
 
 
 def embedding_near_duplicates(

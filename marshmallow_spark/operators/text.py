@@ -242,7 +242,7 @@ def winnow_containment_pairs(
         .select("_id", F.size("_hs").alias("_n"), F.explode("_hs").alias("h"))
         # explicit partition count: the posting-list self-join FANS OUT,
         # so AQE's size-based coalescing of this small exchange would
-        # starve it of parallelism (see dedup._keyed_repartition)
+        # starve it of parallelism (see dedup._banded_keys)
         .repartition(_parallelism(df) * 2, "h")
     )
     if max_doc_freq is not None:

@@ -574,7 +574,8 @@ FROM grams GROUP BY doc_id
 
 
 def q23_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding: candidate pairs sharing the (h0, h1) band.
+    """LSH banding: candidate pairs sharing the (h0, h1) band — one
+    band of two rows.
 
     ``salt_threshold`` is LIVE here (round-2 advice): buckets larger
     than 64 docs fan out over 8 sub-keys so a degenerate band (e.g.
@@ -583,8 +584,13 @@ def q23_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = dedup.minhash_signatures(
         _t(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=2, k=3
     )
-    return dedup.lsh_candidate_pairs(
-        sigs, "doc_id", ["h0", "h1"], salt_threshold=64, num_salts=8
+    return dedup.lsh_banded_pairs(
+        sigs,
+        "doc_id",
+        num_bands=1,
+        rows_per_band=2,
+        salt_threshold=64,
+        num_salts=8,
     )
 
 
@@ -652,10 +658,8 @@ WHERE i.inter >= (sa.sz + sb.sz - i.inter) * 0.5
 
 def q30_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: jaccard pairs (q24, capped index) ->
-    connected components via alternating large-star/small-star — the
-    GIANT-component-safe O(log^2 n)-round variant is the graded
-    default (round-2 advice); label propagation remains as the
-    small-graph fast path in operators/dedup.py."""
+    connected components via alternating large-star/small-star, the
+    GIANT-component-safe O(log^2 n)-round algorithm (round-2 advice)."""
     pairs = dedup.ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"),
         "doc_id",
@@ -695,8 +699,8 @@ def q31_minhash_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold — 2-hash bands degenerate on this dense near-dup
     # corpus, 3.2M candidates from 5k docs at sf0.1), LIVE hot-bucket
     # salting, array-intersect verification of candidates only, eager
-    # persists at the stage boundaries, and giant-component-safe star
-    # clustering
+    # persists at the stage boundaries, and the pipeline's
+    # giant-component-safe star clustering
     return dedup.minhash_dedup_pipeline(
         docs,
         "doc_id",
@@ -707,7 +711,6 @@ def q31_minhash_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_jaccard=0.5,
         salt_threshold=64,
         num_salts=8,
-        use_star=True,
     ).orderBy("id")
 
 
@@ -829,7 +832,6 @@ def q45_star_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         min_jaccard=0.5,
         salt_threshold=None,
-        use_star=True,
         candidate_strategy="star",
     ).orderBy("id")
 

@@ -227,6 +227,17 @@ def test_q42_banded_pairs_single_scan_reused_exchange(spark, sf_dir):
     assert shuffle_exchanges(plan) <= 3, plan
 
 
+def test_q23_one_band_pairs_single_scan_reused_exchange(spark, sf_dir):
+    """One-band salted LSH (lsh_banded_pairs num_bands=1): one parquet
+    scan, both self-join sides off one band-key exchange
+    (ReusedExchange), and no trailing distinct — with one band every
+    pair meets once — so at most the signature and band-key shuffles."""
+    plan = final_plan(QUERIES["q23_minhash_band_pairs"](spark, sf_dir))
+    assert len(file_scans(plan)) == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert shuffle_exchanges(plan) <= 2, plan
+
+
 def test_star_candidates_single_scan_reused_exchange(spark, sf_dir):
     """q45's star candidate generator: one parquet scan (the 16-hash
     signature projection runs once), the bucket-min aggregate and the
@@ -483,7 +494,7 @@ def test_q64_incremental_dedup_no_blowup_pushdown(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     scans = file_scans(plan)
-    assert len(scans) <= 4, plan
+    assert len(scans) == 2, plan
     for s in scans:
         assert "doc_id" in s, s
 
