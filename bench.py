@@ -186,52 +186,41 @@ def main() -> None:
     timed("clips_speech_activity", run_vad)
 
     # -- audio-feature snapshot drift over the SAME parquet clips ----------
-    # two full decode passes (reference metrics + gain-normalized
-    # current side's transform+metrics) feeding one (feature, bin)
-    # exchange for all four monitored metrics; the 4-row collect
-    # consumes the histograms, which consume every decoded sample —
-    # nothing for Catalyst to prune
+    # two full decode passes (reference metrics + the gain-normalized
+    # current side's fused gain+metrics kernel) feeding one
+    # (feature, bin) exchange for all four monitored metrics; the 4-row
+    # collect consumes the histograms, which consume every decoded
+    # sample — nothing for Catalyst to prune
     from marshmallow_spark.functions.audio_quality import audio_feature_drift
-    from marshmallow_spark.functions.audio_transform import normalize_gain
+    from marshmallow_spark.functions.audio_transform import (
+        gain_normalized_quality_metrics,
+    )
 
     def run_feature_drift():
         audio_feature_drift(
-            clips_df, normalize_gain(clips_df, target_dbfs=-12.0)
+            audio_quality_metrics(clips_df),
+            gain_normalized_quality_metrics(clips_df, target_dbfs=-12.0),
         ).collect()
 
     run_feature_drift()
     timed("clips_feature_drift", run_feature_drift)
 
-    # -- quality-gated full suite: fused (one decode) vs two-pass ----------
-    # The round-5 fusion folds the quality gate into the invariant's
-    # decode: bytes are scanned + decoded ONCE (1 MapInArrow node vs 2;
-    # before the quality_violations single-pass rewrite it was 4).
-    # Identical violation rows (test-pinned). At this corpus's ~1 KB
-    # payloads the decode is a modest slice of wall on local[32], so
-    # the pair lands within co-tenancy noise of each other here — the
-    # halved payload scan is the 100 TB lever (MB-scale clips, IO-bound
-    # executors), and the plan shape is what the tests pin. Warm-up
-    # pass per variant so the pair compares steady state, not JIT.
+    # -- quality-gated full suite: invariant + quality gate from ONE decode --
+    # the fused kernel folds the quality gate into the invariant's
+    # decode: bytes are scanned + decoded once (1 MapInArrow node).
+    # Warm-up pass first so the entry measures steady state, not JIT.
     QT = {
         "min_rms_dbfs": -60.0,
         "max_clipping_ratio": 0.001,
         "max_abs_dc_offset": 0.03,
     }
-    for label, fuse in (
-        ("clips_quality_suite_fused", True),
-        ("clips_quality_suite_2pass", False),
-    ):
-        qsuite = ClipValidationSuite(
-            codecs_dim(spark), quality_thresholds=QT, fuse_audio=fuse
-        )
+    qsuite = ClipValidationSuite(codecs_dim(spark), quality_thresholds=QT)
 
-        def run_q(qsuite=qsuite):
-            qsuite.violations(clips_df).write.mode("overwrite").format(
-                "noop"
-            ).save()
+    def run_q():
+        qsuite.violations(clips_df).write.mode("overwrite").format("noop").save()
 
-        run_q()
-        timed(label, run_q)
+    run_q()
+    timed("clips_quality_suite_fused", run_q)
 
     # -- incremental validation of a 5% append (snapshot-manifest table) --
     # The 100 TB deployment unit of work: upstream appends a nightly

@@ -38,6 +38,10 @@ This module also holds the decode scaffold every Arrow audio kernel
   each input batch onto its same-row-count output batch.
 - ``masked_array(vals, valid, type)`` assembles a NULL-masked output
   column from numpy in one call.
+- ``segment_reduce(ufunc, x, lens, dtype=, fill=)`` reduces each
+  ``lens``-long run of a concatenated buffer (runs start at
+  ``row_starts(lens)``) and gives an empty run ``fill``; every per-clip
+  reduction whose clip may be empty goes through it.
 """
 
 from __future__ import annotations
@@ -458,6 +462,19 @@ def row_starts(lens: np.ndarray) -> np.ndarray:
     return starts
 
 
+def segment_reduce(ufunc, x, lens, *, dtype=np.float64, fill=0):
+    """Per-row ``ufunc.reduceat(x, ..., dtype=dtype)`` over ``x`` split
+    into ``lens``-long runs; empty rows get ``fill``. reduceat returns
+    ``x[start]`` for an empty run and raises for a trailing one (its
+    start is ``len(x)``), so only the non-empty runs are reduced and
+    their results scattered back into a ``dtype`` array."""
+    out = np.full(len(lens), fill, dtype=dtype)
+    nz = lens > 0
+    if nz.any():
+        out[nz] = ufunc.reduceat(x, row_starts(lens)[nz], dtype=dtype)
+    return out
+
+
 def decoded_chunks(
     cb: ClipBatch,
     rows: np.ndarray,
@@ -560,36 +577,18 @@ UDF_CHUNK_ROWS = 1024
 
 
 def _snr_db(ref_flat, dec_flat, lens) -> np.ndarray:
-    """Per-row SNR via reduceat over the concatenated sample arrays."""
-    starts = row_starts(lens)
+    """Per-row SNR from per-row power sums over the concatenated sample
+    arrays."""
     n = len(ref_flat)
-    nz = lens > 0
-    # trailing zero-length rows put their start at n — out of bounds
-    # for reduceat; reduce over the nonzero rows and scatter back
-    starts_nz = starts[nz]
-
-    def scatter(vals):
-        out = np.zeros(len(lens))
-        out[nz] = vals
-        return out
-
     # square into a reusable f64 buffer (accumulation stays float64 for
-    # the reduceat sums); err lives in a f32 workspace view
+    # the per-row sums); err lives in a f32 workspace view
     p = _WS.f64("t", n)
     np.multiply(ref_flat, ref_flat, out=p)
-    sig_pow = (
-        scatter(np.add.reduceat(p, starts_nz))
-        if n and starts_nz.size
-        else np.zeros(len(lens))
-    )
+    sig_pow = segment_reduce(np.add, p, lens)
     err = _WS.f32("err", n)
     np.subtract(ref_flat, dec_flat, out=err)
     np.multiply(err, err, out=p)
-    err_pow = (
-        scatter(np.add.reduceat(p, starts_nz))
-        if n and starts_nz.size
-        else np.zeros(len(lens))
-    )
+    err_pow = segment_reduce(np.add, p, lens)
     with np.errstate(divide="ignore", invalid="ignore"):
         snr = 10.0 * np.log10(sig_pow / np.maximum(err_pow, 1e-30))
     return np.where(err_pow <= 1e-30, np.inf, snr)
@@ -656,44 +655,6 @@ def _id_at(i: int, id_off: np.ndarray, id_data: np.ndarray) -> str:
     return bytes(id_data[id_off[i] : id_off[i + 1]]).decode("utf-8", "replace")
 
 
-def _gate_stats(x: np.ndarray, lens: np.ndarray, clip_threshold: np.float32):
-    """Per-segment (sum, sumsq, clipped_count) over the concatenated
-    float32 sample array — the subset of audio_quality._segment_stats
-    the fused quality gate needs (no peak / zero-crossings). Same
-    accumulation discipline: reduceat with float64 accumulation, no
-    float64 copy of the samples."""
-    starts = row_starts(lens)
-    if x.shape[0] == 0:
-        z = np.zeros(len(lens))
-        return z, z.copy(), z.copy()
-    nz = lens > 0
-    n = x.shape[0]
-    # trailing zero-length segments put their start at n — out of
-    # bounds for reduceat; reduce over nonzero segments and scatter
-    starts = starts[nz]
-    full = np.zeros(len(lens))
-
-    def scatter(vals):
-        out = full.copy()
-        out[nz] = vals
-        return out
-
-    s = scatter(np.add.reduceat(x, starts, dtype=np.float64))
-    # dtype= AND out=: the float64 product loop into a reused buffer
-    # (fresh multi-MB mallocs per chunk serialize workers on the page
-    # allocator — see _Workspace)
-    xx = np.multiply(x, x, dtype=np.float64, out=_WS.f64("g_xx", n))
-    ss = scatter(np.add.reduceat(xx, starts))
-    ax = np.abs(x, out=_WS.f32("g_ax", n))
-    clipth = np.greater_equal(
-        ax, clip_threshold, out=_WS._get("g_th", n, np.bool_)
-    )
-    clipped = scatter(np.add.reduceat(clipth, starts, dtype=np.float64))
-    return s, ss, clipped
-
-
-
-
 def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
     """One Arrow RecordBatch -> violation RecordBatch (or None).
 
@@ -708,13 +669,13 @@ def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
     byte gather — only flagged rows pay per-row string extraction.
 
     ``quality`` fuses the signal-quality gate into the SAME decode
-    pass (keys: min_rms_dbfs / max_clipping_ratio / max_abs_dc_offset /
-    clip_threshold): sum, sum-of-squares, and clipped-sample counts
-    accumulate from the samples already decoded for the SNR check, and
-    rows the invariant does not decode (truncated payloads, rows
-    failing the optional ``_inv_eligible`` input column) get a
-    prefix-decode so the gate measures exactly the rows the standalone
-    audio_quality_metrics measures. Output switches to FUSED_OUT_SCHEMA:
+    pass (keys: min_rms_dbfs / max_clipping_ratio / max_abs_dc_offset):
+    sum, sum-of-squares, and clipped-sample counts accumulate from the
+    samples already decoded for the SNR check, and rows the invariant
+    does not decode (truncated payloads, rows failing the optional
+    ``_inv_eligible`` input column) get a prefix-decode so the gate
+    measures exactly the rows the standalone audio_quality_metrics
+    measures. Output switches to FUSED_OUT_SCHEMA:
     invariant rows plus one metrics row per threshold-breaching clip
     (messages rendered JVM-side downstream). An ``_inv_eligible``
     boolean input column, when present, gates every invariant-side
@@ -762,12 +723,16 @@ def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
         out_snr.append(None)
 
     if quality is not None:
+        from .audio_quality import _sample_sums
+
         q_n = np.zeros(n, dtype=np.int64)
         q_s = np.zeros(n)
         q_ss = np.zeros(n)
         q_clip = np.zeros(n)
-        q_measured = np.zeros(n, dtype=bool)
-        clip_threshold = np.float32(quality["clip_threshold"])
+
+        def measure(sel, x, lens):
+            q_n[sel] = lens
+            q_s[sel], q_ss[sel], q_clip[sel], _ = _sample_sums(x, lens)
 
     decodable = structural_ok & ~bad_len
     for _c, sel, dec, _ in decoded_chunks(
@@ -777,12 +742,7 @@ def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
         if quality is not None:
             # the fused gate reuses THIS decode — the whole point:
             # bytes are scanned and decoded once for both checks
-            s_, ss_, cl_ = _gate_stats(dec[: len(ref_flat)], lens, clip_threshold)
-            q_n[sel] = lens
-            q_s[sel] = s_
-            q_ss[sel] = ss_
-            q_clip[sel] = cl_
-            q_measured[sel] = lens > 0
+            measure(sel, dec[: len(ref_flat)], lens)
         snr = _snr_db(ref_flat, dec[: len(ref_flat)], lens)
         for j in np.flatnonzero(snr < SNR_THRESHOLD_DB):
             i = sel[j]
@@ -804,12 +764,7 @@ def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
             chunk_rows=UDF_CHUNK_ROWS,
             buf_name="gather_buf",
         ):
-            s_, ss_, cl_ = _gate_stats(dec, lens, clip_threshold)
-            q_n[sel] = lens
-            q_s[sel] = s_
-            q_ss[sel] = ss_
-            q_clip[sel] = cl_
-            q_measured[sel] = True
+            measure(sel, dec, lens)
 
     t_arr = col["transcript"]
     t_valid = _np_bool(pc.is_valid(t_arr))
@@ -839,6 +794,7 @@ def check_invariant_arrow_batch(batch, *, quality: dict | None = None):
     # on the exact float64 values shipped below, so the flagged set is
     # identical to the standalone gate's)
     n_inv = len(out_id)
+    q_measured = q_n > 0
     with np.errstate(divide="ignore", invalid="ignore"):
         denom = np.maximum(q_n, 1).astype(np.float64)
         rms_dbfs = 20.0 * np.log10(np.maximum(np.sqrt(q_ss / denom), 1e-12))

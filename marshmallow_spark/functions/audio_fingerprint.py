@@ -53,12 +53,12 @@ import numpy as np
 
 from .audio import (
     CLIP_COLS,
-    _WS,
     clip_batch,
     decoded_chunks,
     map_clips,
-    row_starts,
+    segment_reduce,
 )
+from .audio_quality import _sign_changes, _window_powers
 
 FINGERPRINT_OUT_SCHEMA = (
     "clip_id string, codec string, sr_hz int, n_windows long, "
@@ -105,51 +105,22 @@ def _window_envelope(
     int8 flat, env_b int8 flat) with TWO int8s per window —
     [q_loudness, q_crossings] interleaved — where the windows of clip
     i occupy one contiguous run. Fully vectorized: the window
-    boundaries tile the flat array exactly, so one reduceat computes
-    every window's energy and one more its crossing count (a crossing
-    between two windows of the same clip is assigned to the earlier
-    window; inter-CLIP straddles are zeroed like
-    audio_quality._segment_stats does)."""
-    nwin = np.where(lens > 0, -(-lens // np.maximum(w, 1)), 0).astype(np.int64)
-    total = int(nwin.sum())
+    boundaries tile the flat array exactly, so
+    audio_quality._window_powers gives every window's energy and one
+    segment_reduce over audio_quality._sign_changes its crossing count
+    (a crossing between two windows of the same clip is assigned to the
+    earlier window; inter-CLIP straddles are not crossings)."""
+    nwin, wpow, _, wlen = _window_powers(x, lens, w)
+    total = wpow.shape[0]
     if total == 0:
         e = np.empty(0, dtype=np.int8)
         return nwin, e, e.copy()
-    woff = row_starts(nwin)
-    ci = np.repeat(np.arange(len(nwin)), nwin)
-    k = np.arange(total, dtype=np.int64) - woff[ci]
-    cstart = row_starts(lens)
-    wstart = cstart[ci] + k * w[ci]
-    wlen = np.minimum(w[ci], lens[ci] - k * w[ci]).astype(np.float64)
-    # dtype= AND out=: exact float64 squares into a reused workspace
-    # buffer (per-chunk mallocs serialize workers — audio._Workspace)
-    xx = np.multiply(x, x, dtype=np.float64, out=_WS.f64("fp_xx", x.shape[0]))
-    ss = np.add.reduceat(xx, wstart)
-    ss = np.where(wlen > 0, ss, 0.0)  # reduceat zero-length quirk
-    db = 10.0 * np.log10(np.maximum(ss / np.maximum(wlen, 1.0), 1e-12))
+    db = 10.0 * np.log10(np.maximum(wpow, 1e-12))
 
-    n = x.shape[0]
-    if n > 1:
-        sign = x >= 0
-        changes = sign[1:] != sign[:-1]
-        # a trailing EMPTY clip's start equals n, putting its boundary
-        # index at n-1 == len(changes) — bound-filter (fuzz-caught)
-        straddle = cstart[1:] - 1
-        changes[straddle[(straddle >= 0) & (straddle < n - 1)]] = False
-        # reduceat boundaries: only windows that can OWN a pair
-        # (wstart <= n-2). Clamping a trailing 1-sample window to n-2
-        # instead would steal the previous window's last crossing
-        # (fuzz-caught); excluding it lets the previous segment run to
-        # the end, which is correct — no pair starts at n-1.
-        can_own = wstart <= max(n - 2, 0)
-        zc = np.zeros(total)
-        if can_own.any():
-            zc[can_own] = np.add.reduceat(
-                changes, wstart[can_own], dtype=np.float64
-            )
-        zc = np.where(wlen > 1, zc, 0.0)
-    else:
-        zc = np.zeros(total)
+    # a crossing between two windows of one clip belongs to the earlier
+    # window, as the window's last slot pairs it with the next window
+    zc = segment_reduce(np.add, _sign_changes(x, lens), wlen.astype(np.int64))
+    zc = np.where(wlen > 1, zc, 0.0)
 
     def q(vals, width, offset):
         return np.clip(

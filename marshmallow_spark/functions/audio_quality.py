@@ -36,6 +36,7 @@ from .audio import (
     map_clips,
     masked_array,
     row_starts,
+    segment_reduce,
 )
 
 #: |sample| at or above this (in [-1, 1] float PCM) counts as clipped —
@@ -65,77 +66,67 @@ QUALITY_OUT_SCHEMA = (
 QUALITY_CHUNK_ROWS = 512
 
 
-def _segment_stats(x: np.ndarray, lens: np.ndarray):
-    """Vectorized per-segment stats over the concatenated sample array
-    ``x`` partitioned into ``lens``-sized segments. Returns float64
-    arrays (sum, sumsq, peak, clipped_count, zero_crossings); rows with
-    lens == 0 are zeroed (reduceat's zero-length quirk masked)."""
-    starts = row_starts(lens)
+def _sample_sums(x: np.ndarray, lens: np.ndarray):
+    """Per-segment (sum, sumsq, clipped_count) float64 arrays over the
+    concatenated float32 sample array ``x`` partitioned into
+    ``lens``-sized segments (0 for empty segments), plus ``|x|`` as a
+    float32 workspace view — the statistics the fused quality gate
+    (audio.check_invariant_arrow_batch) needs, and the base of
+    :func:`_segment_stats`.
+
+    All sums accumulate in float64 via reduceat's dtype= without ever
+    materializing a float64 copy of the sample array: the decoded
+    samples are exact k/32768 float32 values, so the float32 abs /
+    threshold-compare below are bit-identical to the float64 versions
+    (nearest representable sample is ~3e-5 from the 0.999 threshold vs
+    float32's ~1.2e-7 rounding), while moving half the bytes — this
+    kernel is memory-bandwidth-bound at 32 threads. Every per-sample
+    temporary lives in the shared _Workspace: mallocing multi-MB arrays
+    per chunk serializes 32 workers on the kernel page allocator
+    (audio.py _Workspace docstring; measured here as a 4-5x wall
+    inflation at 1.2M clips before the reuse)."""
     n = x.shape[0]
-    nz = lens > 0
-    if n == 0:
-        z = np.zeros(len(lens))
-        return z, z.copy(), z.copy(), z.copy(), z.copy()
-    # reduceat indexes must stay < n: a TRAILING zero-length segment's
-    # start equals n and raises IndexError (fuzz-caught). Reduce over
-    # the nonzero segments only and scatter back — boundaries stay
-    # correct because zero-length rows contribute no samples between
-    # their neighbors.
-    starts = starts[nz]
-    full = np.zeros(len(lens))
-
-    def scatter(vals):
-        out = full.copy()
-        out[nz] = vals
-        return out
-
-    # All reductions accumulate in float64 via reduceat's dtype= without
-    # ever materializing a float64 copy of the sample array: the decoded
-    # samples are exact k/32768 float32 values, so the float32 abs /
-    # square / threshold-compare below are bit-identical to the float64
-    # versions (nearest representable sample is ~3e-5 from the 0.999
-    # threshold vs float32's ~1.2e-7 rounding), while moving half the
-    # bytes — this kernel is memory-bandwidth-bound at 32 threads.
-    # Every per-sample temporary lives in the shared _Workspace:
-    # mallocing multi-MB arrays per chunk serializes 32 workers on the
-    # kernel page allocator (audio.py _Workspace docstring; measured
-    # here as a 4-5x wall inflation at 1.2M clips before the reuse).
-    s = scatter(np.add.reduceat(x, starts, dtype=np.float64))
+    s = segment_reduce(np.add, x, lens)
     # dtype= AND out=: out= alone selects the float32 product loop and
     # only casts the rounded result — dtype forces the exact
     # cast-then-square float64 loop into the reused buffer
     xx = np.multiply(x, x, dtype=np.float64, out=_WS.f64("q_xx", n))
-    ss = scatter(np.add.reduceat(xx, starts))
+    ss = segment_reduce(np.add, xx, lens)
     ax = np.abs(x, out=_WS.f32("q_ax", n))
-    peak = scatter(np.maximum.reduceat(ax, starts).astype(np.float64))
     clipth = np.greater_equal(
         ax, np.float32(CLIP_THRESHOLD), out=_WS._get("q_th", n, np.bool_)
     )
-    clipped = scatter(np.add.reduceat(clipth, starts, dtype=np.float64))
+    clipped = segment_reduce(np.add, clipth, lens)
+    return s, ss, clipped, ax
 
-    if n > 1:
-        sign = np.greater_equal(x, 0, out=_WS._get("q_sg", n, np.bool_))
-        changes = np.not_equal(
-            sign[1:], sign[:-1], out=_WS._get("q_ch", n - 1, np.bool_)
-        )
-        # a change element straddling two segments is not a crossing of
-        # either clip: zero it before the per-segment reduceat
-        straddle = starts[1:] - 1
-        changes[straddle[straddle >= 0]] = False
-        # reduceat over the N-1 change slots at the same starts: the
-        # last in-bounds start may equal len(changes) for a trailing
-        # 1-sample segment — clamp and mask
-        cstarts = np.minimum(starts, max(n - 2, 0))
-        zc = scatter(
-            np.where(
-                lens[nz] > 1,
-                np.add.reduceat(changes, cstarts, dtype=np.float64),
-                0.0,
-            )
-        )
-    else:
-        zc = np.zeros(len(lens))
+
+def _segment_stats(x: np.ndarray, lens: np.ndarray):
+    """:func:`_sample_sums` plus per-segment peak (over the same
+    ``|x|`` buffer) and zero crossings. Returns float64 arrays (sum,
+    sumsq, peak, clipped_count, zero_crossings); rows with lens == 0
+    are zeroed."""
+    s, ss, clipped, ax = _sample_sums(x, lens)
+    peak = segment_reduce(np.maximum, ax, lens, dtype=np.float32).astype(
+        np.float64
+    )
+    zc = segment_reduce(np.add, _sign_changes(x, lens), lens)
     return s, ss, peak, clipped, zc
+
+
+def _sign_changes(x: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """One bool slot per sample of ``x``: True where the sign flips
+    between it and the next sample of the same ``lens`` segment (a
+    workspace view). The slot of a segment's last sample is False: it
+    pairs the sample with the next segment (or, for the last one, with
+    nothing), which is not a crossing of either clip. So the crossings
+    of any run of samples inside one segment is the sum of its own
+    slots."""
+    n = x.shape[0]
+    sign = np.greater_equal(x, 0, out=_WS._get("q_sg", n, np.bool_))
+    changes = _WS._get("q_ch", n, np.bool_)
+    np.not_equal(sign[1:], sign[:-1], out=changes[: max(n - 1, 0)])
+    changes[np.cumsum(lens)[lens > 0] - 1] = False
+    return changes
 
 
 def _quality_batch(cb, codec_col, chunks):
@@ -344,9 +335,10 @@ def fused_audio_violations(
     structural/referential stages (or the standalone invariant kernel,
     which does emit codec violations).
 
-    At 10^12 rows this halves (vs the unfused suite: quarters) the
-    dominant cost of the quality-gated pipeline — the scan+decode of
-    the audio payload column."""
+    At 10^12 rows this halves the dominant cost of the quality-gated
+    pipeline — the scan+decode of the audio payload column — against
+    running audio_invariant_violations and quality_violations
+    separately."""
     from pyspark.sql import functions as F
 
     from .audio import (
@@ -361,7 +353,6 @@ def fused_audio_violations(
         "min_rms_dbfs": min_rms_dbfs,
         "max_clipping_ratio": max_clipping_ratio,
         "max_abs_dc_offset": max_abs_dc_offset,
-        "clip_threshold": CLIP_THRESHOLD,
     }
     base = df.where(
         F.col("codec").isin(*KNOWN_CODECS) & F.col("bytes").isNotNull()
@@ -412,10 +403,10 @@ NOISE_WINDOW_MS = 100
 def _window_powers(x, lens, w):
     """(nwin per clip, mean power per window, window->clip index,
     window length in samples) over the concatenated sample array — the
-    shared wall-clock windowing of audio_fingerprint, kept here
-    power-only.  The tail window of a clip may be shorter than ``w``;
-    ``wlen`` carries the true sample count so callers can weight by
-    time instead of window count."""
+    wall-clock windowing shared by the noise-floor, VAD and fingerprint
+    kernels.  The tail window of a
+    clip may be shorter than ``w``; ``wlen`` carries the true sample
+    count so callers can weight by time instead of window count."""
     nwin = np.where(lens > 0, -(-lens // np.maximum(w, 1)), 0).astype(np.int64)
     total = int(nwin.sum())
     if total == 0:
@@ -459,18 +450,11 @@ def noise_floor_batch(batch, *, window_ms: int = NOISE_WINDOW_MS):
         chunk_rows=QUALITY_CHUNK_ROWS,
         buf_name="nf_buf",
     ):
-        nwin, wpow, ci, _ = _window_powers(dec, lens, w_all[sel])
-        nz = nwin > 0
-        starts = row_starts(nwin)[nz]
-        tot = np.zeros(len(nwin))
-        mn = np.zeros(len(nwin))
-        if starts.size:
-            tot[nz] = np.add.reduceat(wpow, starts)
-            mn[nz] = np.minimum.reduceat(wpow, starts)
+        nwin, wpow, _, _ = _window_powers(dec, lens, w_all[sel])
         nwin_all[sel] = nwin
-        sum_pow[sel] = tot
+        sum_pow[sel] = segment_reduce(np.add, wpow, nwin)
         sum_len[sel] = nwin  # windows per clip (powers are per-window means)
-        min_pow[sel] = mn
+        min_pow[sel] = segment_reduce(np.minimum, wpow, nwin)
         measured[sel] = nwin >= 2
 
     with np.errstate(divide="ignore", invalid="ignore"):
@@ -529,8 +513,8 @@ DRIFT_FEATURES_DEFAULT: dict[str, tuple[float, float]] = {
 
 
 def audio_feature_drift(
-    df_ref,
-    df_cur,
+    m_ref,
+    m_cur,
     *,
     features: dict[str, tuple[float, float]] | None = None,
     nbins: int = 20,
@@ -543,13 +527,20 @@ def audio_feature_drift(
     reveal — a pipeline change that re-levels loudness, introduces
     clipping, or shifts the DC bias between ingest batches.
 
-    Plan shape at 10^12 clips: ONE decode pass per snapshot (the same
-    pruned 4-column mapInArrow as audio_quality_metrics — payload bytes
-    never shuffle), a zero-shuffle melt, and ONE hash exchange on
-    (feature, bin) for ALL monitored features via
-    :func:`~..operators.drift.divergence_report_multi`.  Undecodable
-    rows emit NULL metrics and drop out of every histogram (measurement
-    vs classification split documented at module top).
+    ``m_ref`` / ``m_cur`` are the two snapshots' quality-metrics frames
+    (QUALITY_OUT_SCHEMA): :func:`audio_quality_metrics` of each, or,
+    for a snapshot that is a normalize_gain transform of clips ``df``,
+    ``audio_transform.gain_normalized_quality_metrics(df, ...)``, which
+    measures the releveled samples from one decode of the source
+    payload instead of shipping the re-encoded bytes across the
+    Python/JVM boundary and decoding them again.
+
+    Plan shape at 10^12 clips: ONE decode pass per snapshot (a pruned
+    4-column mapInArrow — payload bytes never shuffle), a zero-shuffle
+    melt, and ONE hash exchange on (feature, bin) for ALL monitored
+    features via :func:`~..operators.drift.divergence_report_multi`.
+    Undecodable rows carry NULL metrics and drop out of every histogram
+    (measurement vs classification split documented at module top).
 
     Result: one row per feature (feature, psi, chi2, dof, jsd),
     ordered by feature; identical snapshots give exact zeros."""
@@ -558,27 +549,10 @@ def audio_feature_drift(
     from ..operators.drift import divergence_report_multi
 
     feats = dict(features or DRIFT_FEATURES_DEFAULT)
-    m0 = audio_quality_metrics(df_ref).withColumn("_snap", F.lit(0))
-    # Composition fusion (guide §4): when the current snapshot is a
-    # normalize_gain transform, its metrics come from ONE decode of the
-    # SOURCE payload — gain + pcm16 quantization applied in memory —
-    # instead of decode -> re-encode -> full payload column across the
-    # Python/JVM boundary twice -> decode again. Bit-identical metrics
-    # (the fused kernel applies the transform's exact quantization
-    # chain; test-pinned), one MapInArrow node instead of two chained
-    # ones, and the multi-GB re-encoded bytes never materialize.
-    fusion = getattr(df_cur, "_mms_gain_fusion", None)
-    if fusion is not None:
-        from .audio_transform import gain_normalized_quality_metrics
-
-        src, target_dbfs = fusion
-        m1 = gain_normalized_quality_metrics(
-            src, target_dbfs=target_dbfs
-        ).withColumn("_snap", F.lit(1))
-    else:
-        m1 = audio_quality_metrics(df_cur).withColumn("_snap", F.lit(1))
     return divergence_report_multi(
-        m0.unionByName(m1),
+        m_ref.withColumn("_snap", F.lit(0)).unionByName(
+            m_cur.withColumn("_snap", F.lit(1))
+        ),
         feats,
         "_snap",
         nbins,

@@ -31,6 +31,7 @@ from .audio import (
     map_clips,
     masked_array,
     row_starts,
+    segment_reduce,
 )
 
 RESAMPLE_OUT_SCHEMA = (
@@ -81,8 +82,7 @@ def _gain_scaled_pcm16_chunk(
     # f32 samples — identical to the astype(float64) copy the round-5
     # form paid a full memory pass for (_segment_stats' same trick)
     sq = np.multiply(dec32, dec32, dtype=np.float64, out=_WS.f64("gn_sq", m))
-    ssum = np.add.reduceat(sq, starts) if m else np.zeros(len(lens))
-    ssum[lens == 0] = 0.0
+    ssum = segment_reduce(np.add, sq, lens)
     rms = np.sqrt(ssum / np.maximum(lens, 1))
     gains = np.where(rms > 0.0, target_amp / np.maximum(rms, 1e-300), 1.0)
     gain_db = np.where(
@@ -268,13 +268,15 @@ def trim_silence_arrow_batch(batch, threshold: float):
         total = int(lens.sum())
         idxs = np.arange(total, dtype=np.int64)
         active = np.abs(dec) >= np.float32(threshold)
-        big = np.int64(total + 1)
-        first = np.minimum.reduceat(np.where(active, idxs, big), starts)
-        last = np.maximum.reduceat(
-            np.where(active, idxs, np.int64(-1)), starts
+        big = total + 1
+        # an empty or fully-silent clip gets first > last
+        first = segment_reduce(
+            np.minimum, np.where(active, idxs, big), lens, dtype=np.int64, fill=big
         )
-        nz = lens > 0
-        silent = (~nz) | (first > last)
+        last = segment_reduce(
+            np.maximum, np.where(active, idxs, -1), lens, dtype=np.int64, fill=-1
+        )
+        silent = first > last
         rel_first = np.where(silent, 0, first - starts)
         rel_last = np.where(silent, -1, last - starts)
         keep = rel_last - rel_first + 1  # 0 for fully-silent clips
@@ -525,27 +527,18 @@ def normalize_gain(df, *, target_dbfs: float = -20.0):
     is reported in dB per clip). One row out per row in, zero shuffles
     — a pure mapInArrow over the pruned scan.
 
-    The returned frame carries a ``_mms_gain_fusion`` composition tag
-    (source frame, target): downstream kernels that only
-    need the DECODED samples of the releveled audio (audio_feature_
-    drift's current-snapshot metrics) fuse the gain transform into
-    their own decode instead of consuming the re-encoded bytes —
-    skipping one pcm16 encode, the Arrow/JVM round-trip of the whole
-    payload column, and one decode, while producing bit-identical
-    samples (the fused path applies the SAME quantization:
-    rint-clip-int16 then the decoder's 1/32768 float32 scale; pinned by
-    tests/test_audio_transform.py). Consuming the frame normally is
-    unaffected."""
+    For the quality metrics of the releveled audio, call
+    :func:`gain_normalized_quality_metrics` on ``df`` instead of
+    measuring this frame: same values from one decode, without the
+    re-encoded payload column."""
     if not (-100.0 <= target_dbfs <= 0.0):
         raise ValueError(f"target_dbfs {target_dbfs} outside [-100, 0]")
-    out = map_clips(
+    return map_clips(
         df,
         CLIP_COLS,
         partial(normalize_gain_batch, target_dbfs=target_dbfs),
         GAIN_OUT_SCHEMA,
     )
-    out._mms_gain_fusion = (df, float(target_dbfs))
-    return out
 
 
 def gain_quality_batch(batch, target_dbfs: float):

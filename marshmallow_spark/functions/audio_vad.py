@@ -53,7 +53,7 @@ from .audio import (
     decoded_chunks,
     map_clips,
     masked_array,
-    row_starts,
+    segment_reduce,
 )
 from .audio_quality import QUALITY_CHUNK_ROWS, SILENCE_DBFS, _window_powers
 
@@ -111,14 +111,11 @@ def speech_activity_batch(
             continue
         m = len(sel)
         nz = nwin > 0  # usable > 0 guarantees all-True, kept for form
-        starts = row_starts(nwin)[nz]
 
         with np.errstate(divide="ignore"):
             wdb = 10.0 * np.log10(np.maximum(wpow, 1e-12))
-        floor = np.full(m, np.nan)
-        peakw = np.full(m, np.nan)
-        floor[nz] = np.minimum.reduceat(wdb, starts)
-        peakw[nz] = np.maximum.reduceat(wdb, starts)
+        floor = segment_reduce(np.minimum, wdb, nwin, fill=np.nan)
+        peakw = segment_reduce(np.maximum, wdb, nwin, fill=np.nan)
         # adaptive two-regime threshold (module docstring)
         thr = np.where(
             peakw - floor <= margin_db,
@@ -127,10 +124,8 @@ def speech_activity_batch(
         )
         active = wdb > thr[ci]
 
-        aw = np.zeros(m, dtype=np.int64)
-        aw[nz] = np.add.reduceat(active, starts)
-        asamp = np.zeros(m)
-        asamp[nz] = np.add.reduceat(np.where(active, wlen, 0.0), starts)
+        aw = segment_reduce(np.add, active, nwin, dtype=np.int64)
+        asamp = segment_reduce(np.add, np.where(active, wlen, 0.0), nwin)
 
         # run-length analysis: a run = consecutive same-activity
         # windows within one clip; silence stats are maxima / first
@@ -147,8 +142,9 @@ def speech_activity_batch(
             np.r_[True, run_clip[1:] != run_clip[:-1]]
         )
         rlast = np.r_[rfirst[1:] - 1, len(ridx) - 1]
-        lg = np.zeros(m)
-        lg[nz] = np.maximum.reduceat(sil_samp, rfirst)
+        lg = segment_reduce(
+            np.maximum, sil_samp, np.bincount(run_clip, minlength=m)
+        )
         ld = np.zeros(m)
         ld[nz] = sil_samp[rfirst]
         tr = np.zeros(m)

@@ -62,7 +62,6 @@ class ClipValidationSuite:
         check_audio: bool = True,
         salted_uniqueness: bool = False,
         quality_thresholds: dict | None = None,
-        fuse_audio: bool = True,
         audio_dedup: bool = False,
         speech_rate_bounds: tuple[float, float] | None = None,
         transcript_consistency: dict | None = None,
@@ -73,12 +72,11 @@ class ClipValidationSuite:
         "max_clipping_ratio": 0.001}``.
 
         When both the invariant and the quality gate are on, the two
-        checks run FUSED by default — one decode of ``bytes`` feeds
-        both (functions/audio_quality.fused_audio_violations); the
-        unfused plan decodes the payload once for the invariant plus
-        once per metrics pass. Identical violation rows either way
-        (pinned by tests); ``fuse_audio=False`` keeps the separate
-        kernels (the parity baseline).
+        checks run FUSED — one decode of ``bytes`` feeds both
+        (functions/audio_quality.fused_audio_violations), with the same
+        violation rows as audio_invariant_violations over the
+        structurally plausible rows plus quality_violations over the
+        decodable ones (pinned by tests).
 
         ``audio_dedup=True`` opts in CONTENT-level uniqueness: clips
         whose acoustic fingerprints collide (functions/
@@ -113,7 +111,6 @@ class ClipValidationSuite:
         self.check_audio = check_audio
         self.salted_uniqueness = salted_uniqueness
         self.quality_thresholds = quality_thresholds
-        self.fuse_audio = fuse_audio
         self.audio_dedup = audio_dedup
         self.speech_rate_bounds = speech_rate_bounds
         self.transcript_consistency = transcript_consistency
@@ -208,11 +205,11 @@ class ClipValidationSuite:
             & F.col("codec").isin(*audio.KNOWN_CODECS)
             & F.col("bytes").isNotNull()
         )
-        if self.check_audio and self.quality_thresholds and self.fuse_audio:
+        if self.check_audio and self.quality_thresholds:
             # one decode of ``bytes`` serves both audio checks; the
             # invariant's structural pre-filter rides into the kernel
             # as _inv_eligible so the quality gate still measures every
-            # decodable clip (identical rows to the unfused branches)
+            # decodable clip
             from ..functions.audio_quality import fused_audio_violations
 
             parts.append(
@@ -222,32 +219,30 @@ class ClipValidationSuite:
                     **self.quality_thresholds,
                 )
             )
-        else:
-            if self.check_audio:
-                # skip_on_field_errors: decode only structurally-plausible rows
-                inv = audio.audio_invariant_violations(
-                    df.where(decodable_pred)
-                ).select(
-                    "clip_id", "field", "message", F.lit("audio").alias("check")
-                )
-                parts.append(inv)
+        elif self.check_audio:
+            # skip_on_field_errors: decode only structurally-plausible rows
+            inv = audio.audio_invariant_violations(
+                df.where(decodable_pred)
+            ).select(
+                "clip_id", "field", "message", F.lit("audio").alias("check")
+            )
+            parts.append(inv)
+        elif self.quality_thresholds:
+            from ..functions.audio_quality import quality_violations
 
-            if self.quality_thresholds:
-                from ..functions.audio_quality import quality_violations
-
-                q = quality_violations(
-                    df.where(
-                        F.col("codec").isin(*audio.KNOWN_CODECS)
-                        & F.col("bytes").isNotNull()
-                    ),
-                    **self.quality_thresholds,
-                ).select(
-                    F.col("clip_id").cast("string").alias("clip_id"),
-                    "field",
-                    "message",
-                    F.lit("audio_quality").alias("check"),
-                )
-                parts.append(q)
+            q = quality_violations(
+                df.where(
+                    F.col("codec").isin(*audio.KNOWN_CODECS)
+                    & F.col("bytes").isNotNull()
+                ),
+                **self.quality_thresholds,
+            ).select(
+                F.col("clip_id").cast("string").alias("clip_id"),
+                "field",
+                "message",
+                F.lit("audio_quality").alias("check"),
+            )
+            parts.append(q)
 
         if self.speech_rate_bounds is not None:
             lo, hi = (float(b) for b in self.speech_rate_bounds)

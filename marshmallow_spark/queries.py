@@ -2011,8 +2011,9 @@ WITH toks AS (
          CAST(floor(before_toks / 500.0) AS BIGINT) AS bin
   FROM cum
 )
-SELECT shard, bin, count(*) AS n_docs, sum(n_tokens) AS tok_sum,
-       greatest(sum(n_tokens) - 500, 0) AS overshoot
+SELECT shard, bin, count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
+       CAST(greatest(sum(n_tokens) - 500, 0) AS BIGINT) AS overshoot
 FROM binned
 GROUP BY shard, bin
 ORDER BY shard, bin
@@ -2211,10 +2212,11 @@ def clips_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-clip MFCC utterance summary (rows-only: FFT/mel/DCT are not
     SQL) — the classic ASR-training featurization: 13-coefficient mean
     MFCC vector over up to 8 head frames plus the peak mel band in Hz,
-    one batched-rfft mapInArrow pass reading only head bytes.
-    Golden-pinned vs a loop-wise numpy reference AND physically
-    validated (the synth tone must land in the matching mel band) in
-    tests/test_audio_mfcc.py."""
+    one batched-rfft mapInArrow pass reading only head bytes; the
+    vector is projected to the scalar columns mfcc_0 .. mfcc_12 (every
+    registered query returns flat columns). Golden-pinned vs a
+    loop-wise numpy reference AND physically validated (the synth tone
+    must land in the matching mel band) in tests/test_audio_mfcc.py."""
     from .functions.audio_mfcc import mfcc_features
 
     df = synth_clips(spark, N_CLIPS, num_partitions=8)
@@ -2225,7 +2227,7 @@ def clips_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sr_hz",
         "n_frames",
         F.round("mel_peak_hz", 6).alias("mel_peak_hz"),
-        F.transform("mfcc", lambda x: F.round(x, 6)).alias("mfcc"),
+        *(F.round(F.col("mfcc")[i], 6).alias(f"mfcc_{i}") for i in range(13)),
     ).orderBy("clip_id")
 
 
@@ -2951,8 +2953,9 @@ toks AS (
          CAST(floor(before_toks / 500.0) AS BIGINT) AS bin
   FROM cum
 )
-SELECT shard, bin, count(*) AS n_docs, sum(n_tokens) AS tok_sum,
-       greatest(sum(n_tokens) - 500, 0) AS overshoot
+SELECT shard, bin, count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS tok_sum,
+       CAST(greatest(sum(n_tokens) - 500, 0) AS BIGINT) AS overshoot
 FROM binned
 GROUP BY shard, bin
 ORDER BY shard, bin
@@ -3728,17 +3731,23 @@ def clips_feature_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-level drift query (clips_drift_psi sees dur_ms only).
     Reference snapshot = the synth corpus; current snapshot = the same
     corpus loudness-normalized to -12 dBFS (functions/audio_transform
-    normalize_gain — a realistic re-mastering event). One decode pass
-    per snapshot, zero-shuffle melt, ONE (feature, bin) exchange for
-    all four monitored metrics; rms_dbfs shows the strong shift,
-    zero_crossing_rate (gain-invariant) stays near zero — the
-    separation test_drift_multi.py pins."""
-    from .functions.audio_quality import audio_feature_drift
-    from .functions.audio_transform import normalize_gain
+    normalize_gain — a realistic re-mastering event), measured by
+    gain_normalized_quality_metrics from one decode of the source
+    payload. One decode pass per snapshot, zero-shuffle melt, ONE
+    (feature, bin) exchange for all four monitored metrics; rms_dbfs
+    shows the strong shift, zero_crossing_rate (gain-invariant) stays
+    near zero — the separation test_drift_multi.py pins."""
+    from .functions.audio_quality import (
+        audio_feature_drift,
+        audio_quality_metrics,
+    )
+    from .functions.audio_transform import gain_normalized_quality_metrics
 
     base = synth_clips(spark, N_CLIPS, with_violations=True, num_partitions=8)
-    releveled = normalize_gain(base, target_dbfs=-12.0)
-    return audio_feature_drift(base, releveled)
+    return audio_feature_drift(
+        audio_quality_metrics(base),
+        gain_normalized_quality_metrics(base, target_dbfs=-12.0),
+    )
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -3803,8 +3812,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #  clips_trim / clips_resample / clips_normalize_gain /
     #  clips_segments: transform kernels golden-pinned per-sample
     #  locally — rotated out for the round-5 mfcc/pitch kernels, the
-    #  oracled q86, the clips_feature_drift check (which itself RUNS
-    #  normalize_gain as its current-snapshot side), and the
+    #  oracled q86, the clips_feature_drift check (whose current-
+    #  snapshot side RUNS normalize_gain's gain chain), and the
     #  cross-modal clips_speech_activity VAD rollup.)
     "clips_segments": clips_segments,
     "clips_image_features": clips_image_features,

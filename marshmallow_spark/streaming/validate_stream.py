@@ -317,29 +317,14 @@ def duplicate_keys_in_window(
     )
 
 
-def audio_invariant_stream(sdf: DataFrame) -> DataFrame:
-    """The per-row audio invariant (decode + SNR vs reference +
-    transcript equality) applied to a STREAMING clips source.
-
-    The batch operator is a stateless Arrow-batched map
-    (functions/audio.py audio_invariant_violations), so it composes
-    with Structured Streaming unchanged — each micro-batch flows
-    through the same zero-copy mapInArrow kernel. Violations stream
-    out continuously; route them to a sink with writeStream (append
-    mode: the op is stateless, no watermark needed).
-    """
-    from ..functions.audio import audio_invariant_violations
-
-    return audio_invariant_violations(sdf)
-
-
 def audio_quality_stream(
     sdf: DataFrame, *, time_col: str | None = None
 ) -> DataFrame:
     """Per-clip signal-quality metrics on a STREAMING clips source —
     the stateless Arrow kernel (functions/audio_quality.py
     quality_metrics_arrow_batch) composes with Structured Streaming
-    unchanged, like :func:`audio_invariant_stream`.
+    unchanged, like audio_invariant_violations (functions/audio.py),
+    which needs no streaming wrapper at all.
 
     ``time_col`` names an event-time column to carry THROUGH the
     kernel (the metrics schema is fixed and would otherwise drop it):

@@ -185,7 +185,7 @@ def _edge_kernels():
     from marshmallow_spark.functions import audio_transform as at
     from marshmallow_spark.functions import audio_vad as av
 
-    every_clip_silent = {"min_rms_dbfs": 0.0, "clip_threshold": 0.999}
+    every_clip_silent = {"min_rms_dbfs": 0.0}
     return {
         "invariant": (audio.check_invariant_arrow_batch, "violations", None),
         "fused_quality": (
@@ -269,6 +269,53 @@ def test_edge_batch_every_kernel(name):
             np.testing.assert_allclose(a["mfcc"], b["mfcc"], rtol=1e-12, atol=0)
     else:
         assert split == rows
+
+
+def test_segment_reduce_matches_row_loop():
+    """Property: segment_reduce == a per-row loop of ufunc.reduce for
+    np.add / np.maximum / np.minimum over ragged rows with empty rows
+    placed first, in the middle and last (reduceat's empty-row quirks:
+    a non-empty result for a middle one, IndexError for a trailing
+    one), keeping the requested output dtype and fill."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    cases = [
+        (np.add, np.float64, 0.0, np.float32),
+        (np.add, np.int64, 0, np.bool_),
+        (np.maximum, np.float64, np.nan, np.float64),
+        (np.minimum, np.int64, 99, np.int64),
+    ]
+
+    @settings(max_examples=60, deadline=None)
+    @given(
+        st.lists(st.integers(min_value=1, max_value=6), min_size=1, max_size=10),
+        st.sets(st.sampled_from(["first", "middle", "last"])),
+        st.integers(min_value=0, max_value=2**31 - 1),
+    )
+    def run(nonempty, empties, seed):
+        lens = list(nonempty)
+        if "middle" in empties:
+            lens.insert(len(lens) // 2, 0)
+        if "first" in empties:
+            lens.insert(0, 0)
+        if "last" in empties:
+            lens.append(0)
+        lens = np.array(lens, dtype=np.int64)
+        rng = np.random.default_rng(seed)
+        raw = rng.integers(-50, 50, int(lens.sum()))
+        for ufunc, dtype, fill, in_type in cases:
+            x = (raw > 0) if in_type is np.bool_ else raw.astype(in_type)
+            got = audio.segment_reduce(ufunc, x, lens, dtype=dtype, fill=fill)
+            assert got.dtype == dtype
+            want, off = [], 0
+            for L in lens:
+                seg = x[off : off + L]
+                off += L
+                want.append(ufunc.reduce(seg, dtype=dtype) if L else fill)
+            np.testing.assert_array_equal(got, np.array(want, dtype=dtype))
+
+    run()
 
 
 def test_decode_scaffold_is_the_only_decode_path():

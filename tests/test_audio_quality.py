@@ -188,13 +188,20 @@ def test_suite_quality_gate_flags_planted_clips(spark):
 
 
 def test_fused_suite_matches_unfused_exactly(spark):
-    """fuse_audio=True (one decode for invariant + quality) emits the
-    IDENTICAL violation set as the separate-kernel plan over a corpus
-    with every planted invariant violation kind PLUS planted silent /
-    clipped clips and a truncated-but-measurable payload (the fused
-    kernel's quality-only prefix-decode path)."""
+    """The suite's fused audio checks (one decode for invariant +
+    quality) emit the IDENTICAL rows as the standalone kernels run
+    separately on the same inputs — audio_invariant_violations over the
+    structurally plausible rows, quality_violations over the decodable
+    ones — over a corpus with every planted invariant violation kind
+    PLUS planted silent / clipped clips and a truncated-but-measurable
+    payload (the fused kernel's quality-only prefix-decode path)."""
     import numpy as np
+    from pyspark.sql import functions as F
 
+    from marshmallow_spark.functions.audio import (
+        KNOWN_CODECS,
+        audio_invariant_violations,
+    )
     from marshmallow_spark.plans.pipeline import ClipValidationSuite
     from marshmallow_spark.sources.synth import codecs_dim, synth_clips
 
@@ -232,32 +239,42 @@ def test_fused_suite_matches_unfused_exactly(spark):
         "max_clipping_ratio": 0.001,
         "max_abs_dc_offset": 0.029,
     }
-    out = {}
-    for fuse in (True, False):
-        suite = ClipValidationSuite(
-            codecs_dim(spark), quality_thresholds=qt, fuse_audio=fuse
-        )
-        out[fuse] = sorted(
-            tuple(r)
-            for r in suite.violations(df)
-            .select("clip_id", "field", "message", "check")
-            .collect()
-        )
-    assert out[True] == out[False]
-    qual = {(c, m) for c, f, m, k in out[True] if k == "audio_quality"}
+    suite = ClipValidationSuite(codecs_dim(spark), quality_thresholds=qt)
+    out = sorted(
+        tuple(r)
+        for r in suite.violations(df)
+        .select("clip_id", "field", "message", "check")
+        .collect()
+    )
+    decodable = F.col("codec").isin(*KNOWN_CODECS) & F.col("bytes").isNotNull()
+    plausible = (
+        F.col("sr_hz").isin(8000, 16000, 22050, 44100)
+        & (F.col("dur_ms") > 0)
+        & decodable
+    )
+    inv = audio_invariant_violations(df.where(plausible)).select(
+        "clip_id", "field", "message", F.lit("audio").alias("check")
+    )
+    qual_rows = quality_violations(df.where(decodable), **qt).select(
+        "clip_id", "field", "message", F.lit("audio_quality").alias("check")
+    )
+    separate = sorted(tuple(r) for r in inv.unionByName(qual_rows).collect())
+    assert [r for r in out if r[3] in ("audio", "audio_quality")] == separate
+    qual = {(c, m) for c, f, m, k in out if k == "audio_quality"}
     qual_ids = {c for c, _ in qual}
     # every planted quality row surfaced through the fused kernel
     assert {"planted-silent", "planted-clipped", "planted-trunc-silent", "planted-odd-sr"} <= qual_ids
     # and the invariant side still flagged the planted corpus rows
-    checks = {k for _, _, _, k in out[True]}
+    checks = {k for _, _, _, k in out}
     assert "audio" in checks and "structural" in checks
 
 
 def test_fused_suite_single_decode_plan(spark):
     """The quality-gated suite's executed plan carries exactly ONE
-    MapInArrow node when fused (the unfused plan: one for the invariant
-    + one for the metrics pass; before the single-pass explode rewrite
-    of quality_violations it was one PER THRESHOLD — 4 total)."""
+    MapInArrow node: the invariant and the quality gate share one
+    decode (run separately they take one each; before the single-pass
+    explode rewrite of quality_violations the gate took one PER
+    THRESHOLD)."""
     from marshmallow_spark.plans.pipeline import ClipValidationSuite
     from marshmallow_spark.sources.synth import codecs_dim, synth_clips
 
@@ -267,16 +284,9 @@ def test_fused_suite_single_decode_plan(spark):
         "max_clipping_ratio": 0.001,
         "max_abs_dc_offset": 0.02,
     }
-    plans = {}
-    for fuse in (True, False):
-        suite = ClipValidationSuite(
-            codecs_dim(spark), quality_thresholds=qt, fuse_audio=fuse
-        )
-        plans[fuse] = (
-            suite.violations(df)._jdf.queryExecution().executedPlan().toString()
-        )
-    assert plans[True].count("MapInArrow") == 1, plans[True]
-    assert plans[False].count("MapInArrow") == 2, plans[False]
+    suite = ClipValidationSuite(codecs_dim(spark), quality_thresholds=qt)
+    plan = suite.violations(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_quality_violations_single_metrics_pass(spark):

@@ -281,19 +281,18 @@ def test_gain_metrics_fusion_exact(spark):
 
 
 def test_feature_drift_uses_fusion_and_matches_unfused(spark):
-    """audio_feature_drift over a normalize_gain current side takes the
-    fused single-decode path (2 MapInArrow nodes, not 3) and returns
-    the identical report to the unfused chain."""
+    """audio_feature_drift with the current side's metrics from the
+    fused gain+metrics kernel plans 2 MapInArrow nodes (the chained
+    normalize_gain -> audio_quality_metrics form plans 3) and returns
+    the identical report to the chained form."""
     from marshmallow_spark.functions.audio_quality import (
         audio_feature_drift,
         audio_quality_metrics,
     )
-    from marshmallow_spark.functions.audio_transform import normalize_gain
-    from marshmallow_spark.operators.drift import divergence_report_multi
-    from marshmallow_spark.functions.audio_quality import (
-        DRIFT_FEATURES_DEFAULT,
+    from marshmallow_spark.functions.audio_transform import (
+        gain_normalized_quality_metrics,
+        normalize_gain,
     )
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(5)
     rows = []
@@ -304,14 +303,26 @@ def test_feature_drift_uses_fusion_and_matches_unfused(spark):
     df = spark.createDataFrame(
         rows, "clip_id string, bytes binary, sr_hz int, codec string"
     )
-    cur = normalize_gain(df, target_dbfs=-12.0)
-    fused_report = audio_feature_drift(df, cur).collect()
+    m_ref = audio_quality_metrics(df)
+    fused = audio_feature_drift(
+        m_ref, gain_normalized_quality_metrics(df, target_dbfs=-12.0)
+    )
+    chained = audio_feature_drift(
+        m_ref, audio_quality_metrics(normalize_gain(df, target_dbfs=-12.0))
+    )
 
-    # unfused chain, built WITHOUT the fusion tag
-    m0 = audio_quality_metrics(df).withColumn("_snap", F.lit(0))
-    m1 = audio_quality_metrics(cur).withColumn("_snap", F.lit(1))
-    unfused_report = divergence_report_multi(
-        m0.unionByName(m1), dict(DRIFT_FEATURES_DEFAULT), "_snap", 20,
-        round_digits=6,
-    ).collect()
-    assert [tuple(r) for r in fused_report] == [tuple(r) for r in unfused_report]
+    fused_report = [tuple(r) for r in fused.collect()]
+    assert fused_report == [tuple(r) for r in chained.collect()]
+
+    def final_plan(d):  # after the collect: the Initial Plan section cut
+        s = d._jdf.queryExecution().executedPlan().toString()
+        return s.split("== Initial Plan ==")[0]
+
+    assert final_plan(fused).count("MapInArrow") == 2, final_plan(fused)
+    assert final_plan(chained).count("MapInArrow") == 3, final_plan(chained)
+    assert {r[0] for r in fused_report} == {
+        "rms_dbfs",
+        "clipping_ratio",
+        "dc_offset",
+        "zero_crossing_rate",
+    }

@@ -76,9 +76,13 @@ def clips(spark):
 
 
 def test_audio_feature_drift_identical_snapshots_zero(spark, clips):
-    from marshmallow_spark.functions.audio_quality import audio_feature_drift
+    from marshmallow_spark.functions.audio_quality import (
+        audio_feature_drift,
+        audio_quality_metrics,
+    )
 
-    rows = audio_feature_drift(clips, clips).collect()
+    m = audio_quality_metrics(clips)
+    rows = audio_feature_drift(m, m).collect()
     assert len(rows) == 4
     for r in rows:
         assert r["psi"] == 0.0, r
@@ -91,13 +95,19 @@ def test_audio_feature_drift_detects_releveling(spark, clips):
     rms_dbfs while leaving the gain-invariant zero-crossing rate near
     zero — the separation that makes the check diagnostic, not just a
     change detector."""
-    from marshmallow_spark.functions.audio_quality import audio_feature_drift
-    from marshmallow_spark.functions.audio_transform import normalize_gain
+    from marshmallow_spark.functions.audio_quality import (
+        audio_feature_drift,
+        audio_quality_metrics,
+    )
+    from marshmallow_spark.functions.audio_transform import (
+        gain_normalized_quality_metrics,
+    )
 
     out = {
         r["feature"]: r
         for r in audio_feature_drift(
-            clips, normalize_gain(clips, target_dbfs=-12.0)
+            audio_quality_metrics(clips),
+            gain_normalized_quality_metrics(clips, target_dbfs=-12.0),
         ).collect()
     }
     assert set(out) == {

@@ -670,11 +670,11 @@ def test_clips_feature_drift_decodes_each_snapshot_once(spark, sf_dir):
     each snapshot's quality-metrics MapInArrow must run ONCE in the
     final plan (the totals branch reuses the histogram exchange) —
     without the reuse the 100 TB corpus would be decoded twice more.
-    TWO Arrow kernels since the round-6 composition fusion: reference
-    metrics, and the current side's fused gain+metrics kernel (the
-    separate normalize_gain transform node — and the full re-encoded
-    payload column it shipped across the Python/JVM boundary — is
-    gone; bit-equality with the chained form is pinned by
+    TWO Arrow kernels: reference metrics, and the current side's
+    metrics from gain_normalized_quality_metrics, which the query
+    passes explicitly (no separate normalize_gain transform node, and
+    no re-encoded payload column across the Python/JVM boundary;
+    bit-equality with the chained form is pinned by
     test_audio_transform.py::test_gain_metrics_fusion_exact)."""
     plan = final_plan(QUERIES["clips_feature_drift"](spark, sf_dir))
     assert plan.count("MapInArrow") == 2, plan

@@ -236,7 +236,6 @@ def test_stream_audio_invariant_matches_batch(spark):
 
     from marshmallow_spark.functions.audio import audio_invariant_violations
     from marshmallow_spark.sources.synth import CLIP_SCHEMA, synth_clips
-    from marshmallow_spark.streaming import audio_invariant_stream
 
     d = tempfile.mkdtemp(prefix="msk_audio_stream_")
     inp = os.path.join(d, "input")
@@ -253,7 +252,7 @@ def test_stream_audio_invariant_matches_batch(spark):
         assert expected, "synthetic table must contain audio violations"
 
         sdf = spark.readStream.schema(CLIP_SCHEMA).parquet(inp)
-        out = audio_invariant_stream(sdf).select("clip_id", "field", "message")
+        out = audio_invariant_violations(sdf).select("clip_id", "field", "message")
         q = (
             out.writeStream.format("memory")
             .queryName("audio_stream_viol")
