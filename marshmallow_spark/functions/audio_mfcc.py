@@ -318,8 +318,13 @@ def pitch_batch(
         pp = np.clip(pk + 1, 0, L - 1)
         y0, y1, y2 = r[rows, pm], r[rows, pk], r[rows, pp]
         denom = y0 - 2.0 * y1 + y2
-        shift = np.where(
-            np.abs(denom) > 1e-30, 0.5 * (y0 - y2) / denom, 0.0
+        # flat peaks (DC, near-silent clips) have denom == 0: divide
+        # only where it is non-zero so no row raises a divide warning
+        shift = np.divide(
+            0.5 * (y0 - y2),
+            denom,
+            out=np.zeros_like(denom),
+            where=np.abs(denom) > 1e-30,
         )
         shift = np.clip(shift, -0.5, 0.5)
         lag_f = pk + np.where((pk > lag_min) & (pk < lag_max), shift, 0.0)

@@ -17,9 +17,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -50,6 +51,19 @@ def cosine_expr(a: str, b: str) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` (query_id, neighbor_id, cosine) pairs per query, ranked
+    by (cosine desc, neighbor id) so ties resolve deterministically."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     id_col: str,
@@ -66,8 +80,6 @@ def cosine_topk(
     partitioned by query with (cosine desc, neighbor id) tie-break so
     results are fully deterministic.
     """
-    from pyspark.sql import Window
-
     q = queries if queries is not None else emb
     qs = F.broadcast(
         q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
@@ -81,14 +93,7 @@ def cosine_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", cos)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(pairs, k)
 
 
 def _plane_component(plane: int, dim: int) -> float:
@@ -97,23 +102,35 @@ def _plane_component(plane: int, dim: int) -> float:
     return 2.0 * (x - math.floor(x)) - 1.0
 
 
+def _plane_dots(vec_col: str, num_planes: int, dim: int) -> list[Column]:
+    """Dot product of ``vec_col`` with each deterministic hyperplane."""
+    dots = []
+    for p in range(num_planes):
+        plane = F.array(*[F.lit(_plane_component(p, d)) for d in range(dim)])
+        dots.append(
+            F.aggregate(
+                F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+        )
+    return dots
+
+
+def _bucket_code(dots: list[Column]) -> Column:
+    """Sign bits of the plane dots summed into one int code."""
+    bits = [
+        F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        for p, dot in enumerate(dots)
+    ]
+    return functools.reduce(lambda a, b: a + b, bits).cast("int")
+
+
 def bucket_expr(vec_col: str, *, num_planes: int = 8, dim: int = 64) -> Column:
     """Column: sign-of-dot-product LSH code over ``num_planes``
     deterministic hyperplanes — usable inline in any projection (no
     join needed to attach buckets)."""
-    bits = []
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(_plane_component(p, d)) for d in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket.cast("int")
+    return _bucket_code(_plane_dots(vec_col, num_planes, dim))
 
 
 def probe_buckets_expr(
@@ -134,24 +151,8 @@ def probe_buckets_expr(
     is deterministic and SQL-oracle-reproducible; element 0 always
     equals :func:`bucket_expr`, so nprobe=1 degenerates to the
     single-bucket path."""
-    dots = []
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(_plane_component(p, d)) for d in range(dim)])
-        dots.append(
-            F.aggregate(
-                F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    bits = [
-        F.when(dots[p] >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        for p in range(num_planes)
-    ]
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    bucket = bucket.cast("int")
+    dots = _plane_dots(vec_col, num_planes, dim)
+    bucket = _bucket_code(dots)
     ranked = F.array_sort(
         F.array(
             *[
@@ -171,20 +172,96 @@ def probe_buckets_expr(
     return F.concat(F.array(bucket), flips)
 
 
-def hyperplane_buckets(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    num_planes: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """(id, bucket): cosine-similar vectors collide with high
-    probability; candidate pairs come from equal buckets."""
-    return emb.select(
-        F.col(id_col),
+def _lsh_cols(id_col: str, vec_col: str, num_planes: int, dim: int) -> list[Column]:
+    """(_id, _v, bucket, _norm): bucket + norm computed inline — one
+    narrow projection, no join to attach; norms are per-VECTOR so the
+    in-bucket re-rank only pays one dot product per pair instead of
+    dot + two redundant norm folds."""
+    return [
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
         bucket_expr(vec_col, num_planes=num_planes, dim=dim).alias("bucket"),
+        norm_expr(vec_col).alias("_norm"),
+    ]
+
+
+def _keyed_topk(
+    emb: DataFrame,
+    cols: list[Column],
+    key: str,
+    *,
+    k: int,
+    probes: str | None,
+    storage: str | None,
+    round_digits: int,
+) -> DataFrame:
+    """Partitioned ANN search shared by :func:`lsh_topk` and
+    :func:`ivf_topk`: the keyed frame ``emb.select(*cols)`` carries
+    (_id, _v, ``key``, _norm[, ``probes``]); every query is exactly
+    re-ranked against the vectors whose ``key`` equals its own key, or,
+    when ``probes`` names an array column, any key in that list.
+
+    How the keyed frame reaches both join sides:
+
+    - ``storage=`` path: written once to parquet
+      (``plans.checkpoint.write_once_parquet``, clustered by ``key``)
+      and both sides scan the read-back table. The key projection never
+      appears in the query plan and a killed run reuses the committed
+      index files — the shape that survives 10^12 rows.
+    - probe list, no storage: the two sides need different columns
+      (probe list vs key) and Catalyst pushes the differing pruning
+      below any shared exchange, so the fold-heavy key projection would
+      run once PER SIDE. The frame is instead persisted EAGERLY: the
+      scan + projection run exactly once and both sides read the cache
+      (Spark's ContextCleaner releases the blocks once the result frame
+      is garbage collected).
+    - single key, no storage: one ``repartition(key)`` exchange.
+
+    Both self-join sides must be the IDENTICAL logical subtree for
+    Catalyst's ReusedExchange to fire — a per-side rename projection
+    gets pushed BELOW the repartition, the two exchange subtrees then
+    differ, and the scan + key projection runs twice (round-2 audit
+    caught exactly that). So: alias the one keyed frame on both sides,
+    join on qualified key refs, and rename only AFTER the join. The
+    physical plan has ONE parquet scan and ONE shuffle, both sides
+    reading the same exchange — enforced by tests/test_plan_audit.py."""
+    frame = emb.select(*cols)
+    if storage is not None:
+        from ..plans.checkpoint import write_once_parquet
+
+        keyed = write_once_parquet(frame, storage, cluster_by=key)
+    elif probes is not None:
+        keyed = frame.persist()
+        keyed.count()  # eager: both sides must read the cache, not race
+    else:
+        keyed = frame.repartition(F.col(key))
+    left = keyed.alias("_knn_l")
+    right = keyed.alias("_knn_r")
+    lc = lambda name: F.col(f"_knn_l.{name}")  # noqa: E731
+    rc = lambda name: F.col(f"_knn_r.{name}")  # noqa: E731
+    if probes is None:
+        qside = left
+        qid, qv, qn, qkey = lc("_id"), lc("_v"), lc("_norm"), lc(key)
+    else:
+        qside = left.select(
+            lc("_id").alias("_qid"),
+            lc("_v").alias("_qv"),
+            lc("_norm").alias("_qn"),
+            F.explode(lc(probes)).alias("_qkey"),
+        )
+        qid, qv, qn, qkey = (F.col(c) for c in ("_qid", "_qv", "_qn", "_qkey"))
+    pairs = (
+        qside.join(right, qkey == rc(key))
+        .where(qid != rc("_id"))
+        .select(
+            qid.alias("query_id"),
+            rc("_id").alias("neighbor_id"),
+            F.round(
+                dot_expr(qv, rc("_v")) / (qn * rc("_norm")), round_digits
+            ).alias("cosine"),
+        )
     )
+    return _rank_topk(pairs, k)
 
 
 def lsh_topk(
@@ -196,7 +273,6 @@ def lsh_topk(
     num_planes: int = 8,
     dim: int = 64,
     nprobe: int = 1,
-    materialize_buckets: bool = False,
     storage: str | None = None,
 ) -> DataFrame:
     """Approximate top-k: bucket by LSH code, exact cosine re-rank
@@ -207,100 +283,24 @@ def lsh_topk(
     the buckets reached by flipping its ``nprobe - 1`` smallest-|dot|
     hyperplane bits, recovering neighbors that sit just across a
     boundary. Probed buckets are distinct by construction (distinct
-    one-bit flips), so candidate sets stay disjoint. As with
-    :func:`ivf_topk`, the probe side needs different columns than the
-    data side, so pass ``materialize_buckets=True`` to persist the
-    (id, vec, bucket, probes, norm) frame eagerly and evaluate the
-    num_planes dot-folds exactly once — the deployed-index shape.
+    one-bit flips), so candidate sets stay disjoint. The
+    (id, vec, bucket, norm, probes) frame is then persisted eagerly, so
+    the num_planes dot-folds evaluate exactly once.
 
-    ``storage=`` is the TABLE-BACKED form of the same idea (round-4
-    verdict): the keyed frame is written once to parquet at that path
-    (``plans.checkpoint.write_once_parquet``, clustered by bucket) and
-    BOTH join sides scan the written table — the plane dot-folds never
-    appear in the query plan at all, and a killed run reuses the
-    already-committed index files. This is the mode that survives
-    10^12 rows, where executor cache (``materialize_buckets``) cannot
-    hold the assignment frame."""
-    from pyspark.sql import Window
-
-    # bucket + norm computed inline — one narrow projection, no join to
-    # attach; norms are per-VECTOR so the in-bucket re-rank only pays
-    # one dot product per pair instead of dot + two redundant norm folds
-    cols = [
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        bucket_expr(vec_col, num_planes=num_planes, dim=dim).alias("bucket"),
-        norm_expr(vec_col).alias("_norm"),
-    ]
+    ``storage=`` writes the keyed frame once to parquet at that path
+    and BOTH join sides scan the written table (see
+    :func:`_keyed_topk`) — the mode for 10^12 rows, where executor
+    cache cannot hold the bucket frame."""
+    cols = _lsh_cols(id_col, vec_col, num_planes, dim)
     if nprobe > 1:
         cols.append(
             probe_buckets_expr(
                 vec_col, num_planes=num_planes, dim=dim, nprobe=nprobe
             ).alias("_probes")
         )
-    if storage is not None:
-        from ..plans.checkpoint import write_once_parquet
-
-        keyed = write_once_parquet(
-            emb.select(*cols), storage, cluster_by="bucket"
-        )
-    elif materialize_buckets and nprobe > 1:
-        keyed = emb.select(*cols).persist()
-        keyed.count()  # eager: both sides must read the cache
-    else:
-        keyed = emb.select(*cols).repartition(F.col("bucket"))
-    # Both self-join sides must be the IDENTICAL logical subtree for
-    # Catalyst's ReusedExchange to fire — a per-side rename projection
-    # gets pushed BELOW the repartition, the two exchange subtrees then
-    # differ, and the scan + num_planes×dim-literal bucket projection
-    # runs twice (round-2 audit caught exactly that). So: alias the one
-    # keyed frame on both sides, join on qualified bucket refs, and
-    # rename only AFTER the join. The physical plan has ONE parquet
-    # scan and ONE shuffle, both sides reading the same exchange —
-    # enforced by tests/test_plan_audit.py.
-    left = keyed.alias("_lsh_l")
-    right = keyed.alias("_lsh_r")
-    lc = lambda name: F.col(f"_lsh_l.{name}")  # noqa: E731
-    rc = lambda name: F.col(f"_lsh_r.{name}")  # noqa: E731
-    if nprobe > 1:
-        probes = left.select(
-            lc("_id").alias("_qid"),
-            lc("_v").alias("_qv"),
-            lc("_norm").alias("_qn"),
-            F.explode(lc("_probes")).alias("_pb"),
-        )
-        pairs = (
-            probes.join(right, F.col("_pb") == rc("bucket"))
-            .where(F.col("_qid") != rc("_id"))
-            .select(
-                F.col("_qid").alias("query_id"),
-                rc("_id").alias("neighbor_id"),
-                F.round(
-                    dot_expr(F.col("_qv"), rc("_v"))
-                    / (F.col("_qn") * rc("_norm")),
-                    6,
-                ).alias("cosine"),
-            )
-        )
-    else:
-        pairs = (
-            left.join(right, lc("bucket") == rc("bucket"))
-            .where(lc("_id") != rc("_id"))
-            .select(
-                lc("_id").alias("query_id"),
-                rc("_id").alias("neighbor_id"),
-                F.round(
-                    dot_expr(lc("_v"), rc("_v")) / (lc("_norm") * rc("_norm")), 6
-                ).alias("cosine"),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    probes = "_probes" if nprobe > 1 else None
+    return _keyed_topk(
+        emb, cols, "bucket", k=k, probes=probes, storage=storage, round_digits=6
     )
 
 
@@ -315,18 +315,7 @@ def ivf_assign_expr(
     list (an IVF coarse codebook is built offline and broadcast — here
     it rides the plan as literals, like lsh bucket hyperplanes).
     Cosines are rounded so the argmax is reproducible cross-engine."""
-    v = _c(vec_col)
-    sims = []
-    for c in centroids:
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        cnorm = math.sqrt(sum(float(x) * float(x) for x in c))
-        dot = F.aggregate(
-            F.zip_with(v, carr, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sims.append(F.round(dot / (norm_expr(vec_col) * F.lit(cnorm)), round_digits))
-    arr = F.array(*sims)
+    arr = F.array(*ivf_cell_sims(vec_col, centroids, round_digits=round_digits))
     return (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
 
 
@@ -440,7 +429,6 @@ def ivf_topk(
     *,
     k: int = 5,
     nprobe: int = 1,
-    materialize_assignments: bool = False,
     storage: str | None = None,
     round_digits: int = 6,
 ) -> DataFrame:
@@ -453,30 +441,20 @@ def ivf_topk(
     query stay bounded by nprobe cell populations, never N.
 
     nprobe=1 keeps the single-scan discipline of lsh_topk: both
-    self-join sides hang off one repartition(cell) exchange (aliased
-    subtree), so the scan + codebook-assignment projection runs once
-    (ReusedExchange in the final plan — enforced by
-    tests/test_plan_audit.py). With nprobe>1 the two sides need
-    different columns (probe list vs cell) and Catalyst pushes the
-    differing pruning/filters below the exchange, so the assignment
-    projection is evaluated once PER SIDE — unless
-    ``materialize_assignments`` is set, which EAGERLY persists the
-    (id, vec, cell, norm, probe_cells) frame so the scan + codebook
-    projection run exactly once and both join sides read the cache.
-    That is how a real IVF index deploys (the assignment table is
-    written once, queries join against it); the cached blocks are
-    released by Spark's ContextCleaner once the result frame is
-    garbage collected.
+    self-join sides hang off one repartition(cell) exchange, so the
+    scan + codebook-assignment projection runs once (ReusedExchange in
+    the final plan — enforced by tests/test_plan_audit.py). With
+    nprobe>1 the (id, vec, cell, norm, probe_cells) frame is persisted
+    eagerly so the codebook projection still runs once and both join
+    sides read the cache — how a real IVF index deploys (the
+    assignment table is written once, queries join against it).
 
-    ``storage=`` IS that written-table deployment shape (round-4
-    verdict closed the cache-vs-table gap): the (id, vec, cell, norm
-    [, probe_cells]) frame is written once to parquet at the path
-    (``plans.checkpoint.write_once_parquet``, clustered by cell) and
-    both join sides scan the read-back table — the codebook assignment
-    projection is absent from the query plan, and a killed run resumes
-    against the committed files instead of recomputing assignments."""
-    from pyspark.sql import Window
-
+    ``storage=`` IS that written-table deployment shape: the keyed
+    frame is written once to parquet at the path (clustered by cell)
+    and both join sides scan the read-back table — the codebook
+    assignment projection is absent from the query plan, and a killed
+    run resumes against the committed files instead of recomputing
+    assignments (see :func:`_keyed_topk`)."""
     cols = [
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -491,61 +469,10 @@ def ivf_topk(
                 vec_col, centroids, nprobe=nprobe, round_digits=round_digits
             ).alias("_probe_cells")
         )
-    if storage is not None:
-        from ..plans.checkpoint import write_once_parquet
-
-        keyed = write_once_parquet(
-            emb.select(*cols), storage, cluster_by="cell"
-        )
-    elif materialize_assignments and nprobe > 1:
-        keyed = emb.select(*cols).persist()
-        keyed.count()  # eager: both sides must read the cache, not race
-    else:
-        keyed = emb.select(*cols).repartition(F.col("cell"))
-    left = keyed.alias("_ivf_l")
-    right = keyed.alias("_ivf_r")
-    lc = lambda name: F.col(f"_ivf_l.{name}")  # noqa: E731
-    rc = lambda name: F.col(f"_ivf_r.{name}")  # noqa: E731
-    if nprobe > 1:
-        probes = left.select(
-            lc("_id").alias("_qid"),
-            lc("_v").alias("_qv"),
-            lc("_norm").alias("_qn"),
-            F.explode(lc("_probe_cells")).alias("_pcell"),
-        )
-        pairs = (
-            probes.join(right, F.col("_pcell") == rc("cell"))
-            .where(F.col("_qid") != rc("_id"))
-            .select(
-                F.col("_qid").alias("query_id"),
-                rc("_id").alias("neighbor_id"),
-                F.round(
-                    dot_expr(F.col("_qv"), rc("_v"))
-                    / (F.col("_qn") * rc("_norm")),
-                    round_digits,
-                ).alias("cosine"),
-            )
-        )
-    else:
-        pairs = (
-            left.join(right, lc("cell") == rc("cell"))
-            .where(lc("_id") != rc("_id"))
-            .select(
-                lc("_id").alias("query_id"),
-                rc("_id").alias("neighbor_id"),
-                F.round(
-                    dot_expr(lc("_v"), rc("_v")) / (lc("_norm") * rc("_norm")),
-                    round_digits,
-                ).alias("cosine"),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    probes = "_probe_cells" if nprobe > 1 else None
+    return _keyed_topk(
+        emb, cols, "cell", k=k, probes=probes, storage=storage,
+        round_digits=round_digits,
     )
 
 
@@ -588,12 +515,9 @@ def lsh_near_duplicates(
         # into the probe subtree only and break exchange reuse (see
         # lsh_banded_pairs mode="star")
         emb = emb.where(F.col(id_col).isNotNull())
-    keyed = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        bucket_expr(vec_col, num_planes=num_planes, dim=dim).alias("bucket"),
-        norm_expr(vec_col).alias("_norm"),
-    ).repartition(F.col("bucket"))
+    keyed = emb.select(*_lsh_cols(id_col, vec_col, num_planes, dim)).repartition(
+        F.col("bucket")
+    )
     if mode == "star":
         mins = (
             keyed.alias("_lnd_m")

@@ -1010,13 +1010,12 @@ def q43_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH ANN with flip-weakest-bit MULTI-PROBE (nprobe=2):
     each query also searches the bucket across its weakest hyperplane
     boundary (smallest rounded |dot|, plane-index tiebreak), recovering
-    neighbors invisible to q32's single-bucket probe. Runs the
-    materialized-bucket mode: the 8 plane dot-folds evaluate once, both
-    join sides read the cached (id, vec, bucket, probes, norm) frame."""
+    neighbors invisible to q32's single-bucket probe. nprobe>1 persists
+    the (id, vec, bucket, probes, norm) frame eagerly: the 8 plane
+    dot-folds evaluate once and both join sides read the cache."""
     emb = _t(spark, sf_dir, "embeddings")
     out = similarity.lsh_topk(
-        emb, "vec_id", "embedding", k=5, num_planes=8, dim=64,
-        nprobe=2, materialize_buckets=True,
+        emb, "vec_id", "embedding", k=5, num_planes=8, dim=64, nprobe=2
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1501,12 +1500,11 @@ def q41_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe=2: the query probes its two nearest cells'
     inverted lists (disjoint by construction — a data vector lives in
     exactly one cell), roughly doubling recall over q38's nprobe=1 at
-    twice the candidate cost. Runs the MATERIALIZED-assignment mode
-    (round-3 verdict): the (id, vec, cell, norm, probe_cells) frame is
-    persisted eagerly so the scan + codebook projection execute once
-    and both join sides read the cache — how a deployed IVF index
-    works. Oracle ranks cells per vector with row_number over the
-    rounded centroid cosines."""
+    twice the candidate cost. nprobe>1 persists the (id, vec, cell,
+    norm, probe_cells) frame eagerly, so the scan + codebook projection
+    execute once and both join sides read the cache — how a deployed
+    IVF index works. Oracle ranks cells per vector with row_number over
+    the rounded centroid cosines."""
     emb = _t(spark, sf_dir, "embeddings")
     centroids = [
         [float(x) for x in r["embedding"]]
@@ -1516,8 +1514,7 @@ def q41_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     out = similarity.ivf_topk(
-        emb, "vec_id", "embedding", centroids, k=5, nprobe=2,
-        materialize_assignments=True,
+        emb, "vec_id", "embedding", centroids, k=5, nprobe=2
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 

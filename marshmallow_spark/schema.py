@@ -254,19 +254,10 @@ class ValidationResult:
     """The three output DataFrames of a validation pass plus driver-side
     error-shape reconstruction (E1-E7 in SURVEY.md §2.6)."""
 
-    def __init__(
-        self,
-        annotated: DataFrame,
-        schema: "Schema",
-        row_key: str,
-        extra_violations: DataFrame | None = None,
-    ):
+    def __init__(self, annotated: DataFrame, schema: "Schema", row_key: str):
         self._annotated = annotated
         self._schema = schema
         self.row_key = row_key
-        #: violation rows produced OUTSIDE the compiled plan (e.g.
-        #: malformed-JSON rows in loads_df, which never reach the plan)
-        self._extra_violations = extra_violations
         helper = [_ERRS, _FIELD_ERRS, _PID, _ROW_KEY, _MAL, _MALKEY]
         self._out_cols = [
             c
@@ -289,7 +280,7 @@ class ValidationResult:
             # malformed-JSON rows carry a recovered (or synthesized)
             # key; well-formed rows keep the declared row key
             key = F.coalesce(key, F.col(_MALKEY))
-        out = (
+        return (
             df.where(F.size(_ERRS) > 0)
             .select(
                 key.alias(self.row_key),
@@ -303,9 +294,6 @@ class ValidationResult:
                 "partition_id",
             )
         )
-        if self._extra_violations is not None:
-            out = out.unionByName(self._extra_violations)
-        return out
 
     @property
     def valid(self) -> DataFrame:

@@ -1,11 +1,13 @@
 """Table-backed ANN index mode (round-4 verdict item #2): the keyed
 (id, vec, cell/bucket, norm, probes) frame is WRITTEN to parquet once
 and both self-join sides scan the table — the deployment shape for
-10^12 rows, where the executor-cache mode (materialize_*) cannot hold
-the assignment frame.
+10^12 rows, where the executor cache that nprobe>1 otherwise persists
+the keyed frame into cannot hold the assignment frame.
 
 Three contracts, each test-enforced:
-1. results identical to the cache-backed mode (which is oracle-green);
+1. results identical to the storage-free mode (which is oracle-green):
+   the eager cache at nprobe=2, the repartition(key) self-join at
+   nprobe=1;
 2. the executed plan reads ONLY the written index — every FileScan
    points at the storage path, the source embeddings parquet is never
    rescanned, so the codebook / hyperplane assignment projection is
@@ -49,8 +51,7 @@ def _rows(df):
 
 def test_ivf_storage_mode_matches_cache_mode(emb, centroids, tmp_path):
     cached = similarity.ivf_topk(
-        emb, "vec_id", "embedding", centroids, k=5, nprobe=2,
-        materialize_assignments=True,
+        emb, "vec_id", "embedding", centroids, k=5, nprobe=2
     )
     stored = similarity.ivf_topk(
         emb, "vec_id", "embedding", centroids, k=5, nprobe=2,
@@ -61,14 +62,35 @@ def test_ivf_storage_mode_matches_cache_mode(emb, centroids, tmp_path):
 
 def test_lsh_storage_mode_matches_cache_mode(emb, tmp_path):
     cached = similarity.lsh_topk(
-        emb, "vec_id", "embedding", k=5, num_planes=8, dim=64,
-        nprobe=2, materialize_buckets=True,
+        emb, "vec_id", "embedding", k=5, num_planes=8, dim=64, nprobe=2
     )
     stored = similarity.lsh_topk(
         emb, "vec_id", "embedding", k=5, num_planes=8, dim=64,
         nprobe=2, storage=str(tmp_path / "lsh_index"),
     )
     assert _rows(stored) == _rows(cached)
+
+
+def test_ivf_storage_nprobe1_matches_repartition_mode(emb, centroids, tmp_path):
+    """nprobe=1 with storage= (no probe list in the written index)
+    returns q38's rows, like its repartition(cell) form."""
+    plain = similarity.ivf_topk(emb, "vec_id", "embedding", centroids, k=5)
+    stored = similarity.ivf_topk(
+        emb, "vec_id", "embedding", centroids, k=5,
+        storage=str(tmp_path / "idx1"),
+    )
+    assert _rows(stored) == _rows(plain)
+
+
+def test_lsh_storage_nprobe1_matches_repartition_mode(emb, tmp_path):
+    """nprobe=1 with storage= returns q32's rows, like its
+    repartition(bucket) form."""
+    plain = similarity.lsh_topk(emb, "vec_id", "embedding", k=5, num_planes=8, dim=64)
+    stored = similarity.lsh_topk(
+        emb, "vec_id", "embedding", k=5, num_planes=8, dim=64,
+        storage=str(tmp_path / "lsh_index1"),
+    )
+    assert _rows(stored) == _rows(plain)
 
 
 def test_storage_plan_reads_only_the_written_index(emb, centroids, tmp_path):

@@ -167,6 +167,64 @@ def test_pitch_recovers_synth_tone(spark):
     assert octave_cases >= 5  # the guard's regression case was exercised
 
 
+def test_pitch_flat_peaks_raise_no_divide_warning():
+    """DC, all-zero and 1-LSB slow square clips leave a flat
+    autocorrelation peak (zero parabola denominator): pitch_batch must
+    skip the interpolation there without any numpy divide warning, and
+    every row keeps its pinned (f0, conf)."""
+    import warnings
+
+    import pyarrow as pa
+
+    from marshmallow_spark.functions.audio_mfcc import pitch_batch
+
+    sr, n = 16000, 2400  # 150 ms at 16 kHz
+    t = np.arange(n)
+    waves = [
+        np.full(n, 1000),
+        np.full(n, -500),
+        np.zeros(n, dtype=np.int64),
+        (t // 125) % 2,
+        (t // 155) % 2,
+        (t // 200) % 2,
+        (t // 227) % 2,
+        np.round(6000 * np.sin(2 * np.pi * 220 * t / sr)),
+    ]
+    want = [
+        (None, 0.0),
+        (None, 0.0),
+        (None, 0.0),
+        (615.3846153846154, 0.5814128697519084),
+        (615.3846153846154, 0.6559606459673232),
+        (615.3846153846154, 0.7338403506679391),
+        (615.3846153846154, 0.7787712301071528),
+        (220.1374264993294, 0.9640265882701424),
+    ]
+    rows = 400
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"c{i:04d}" for i in range(rows)]),
+            pa.array(
+                [waves[i % 8].astype("<i2").tobytes() for i in range(rows)],
+                pa.binary(),
+            ),
+            pa.array([sr] * rows, pa.int32()),
+            pa.array([150] * rows, pa.int32()),
+            pa.array(["pcm16"] * rows),
+            pa.array(["x"] * rows),
+        ],
+        names=["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"],
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = pitch_batch(batch).to_pylist()
+    for i, r in enumerate(out):
+        f0, conf = want[i % 8]
+        assert r["n_head"] == 2048
+        assert r["f0_hz"] == (None if f0 is None else pytest.approx(f0, rel=1e-12))
+        assert r["voiced_conf"] == pytest.approx(conf, rel=1e-12, abs=1e-15)
+
+
 def test_unmeasured_rows_null_semantics(spark):
     """opus codec / NULL payload / non-positive sr -> unmeasured."""
     df = synth_clips(spark, 2500, num_partitions=4)

@@ -94,6 +94,32 @@ def test_quantile_sketch_and_ks(lineitem):
     assert ks_diff > 0.3
 
 
+@pytest.mark.parametrize(
+    "column,scale",
+    [("l_quantity", 1.0), ("l_extendedprice", 1.01), ("l_discount", 1.01)],
+)
+def test_ks_sketch_within_error_budget_of_exact(spark, column, scale):
+    """Drift error budget: the approx-quantile KS (ks_between,
+    npoints=100) stays within 2/npoints of the exact KS (ks_exact_df)
+    on sf0.01 lineitem, even vs odd l_orderkey, with the odd half
+    unshifted or scaled by 1.01 — so a verdict near a KS threshold can
+    only flip inside that band."""
+    from test_oracle_parity import SF_DIR as ORACLE_SF_DIR
+
+    from marshmallow_spark.operators.drift import ks_exact_df
+
+    npoints = 100
+    li = spark.read.parquet(f"{ORACLE_SF_DIR}/lineitem.parquet")
+    odd = F.col("l_orderkey") % 2
+    v = F.col(column).cast("double")
+    df = li.select(F.when(odd == 1, v * scale).otherwise(v).alias("v"), odd.alias("g"))
+    sketch = ks_between(
+        df.where(F.col("g") == 0), df.where(F.col("g") == 1), "v", npoints=npoints
+    )
+    exact = ks_exact_df(df, "v", "g").first().ks
+    assert abs(sketch - exact) <= 2 / npoints, (column, scale, sketch, exact)
+
+
 def test_histogram_and_psi(lineitem):
     a = lineitem.where(F.col("l_orderkey") % 2 == 0)
     b = lineitem.where(F.col("l_orderkey") % 2 == 1)
