@@ -19,8 +19,59 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _bin(column: str, lo: float, hi: float, nbins: int) -> Column:
+    """Clamped int fixed-bin index of ``column`` over [lo, hi): values
+    outside the range land in the edge bins."""
+    width = (float(hi) - float(lo)) / nbins
+    b = F.floor((F.col(column).cast("double") - F.lit(float(lo))) / F.lit(width))
+    return F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1)).cast("int")
+
+
+def _two_sample_counts(df: DataFrame, keys: list, group_col) -> DataFrame:
+    """``groupBy(*keys)`` with (c0, c1) = the row counts of the
+    ``group_col == 0`` and ``group_col == 1`` populations; rows whose
+    group is NULL or any other value count in neither."""
+    g = F.col(group_col) if isinstance(group_col, str) else group_col
+    return df.groupBy(*keys).agg(
+        F.sum(F.when(g == 0, 1).otherwise(0)).alias("c0"),
+        F.sum(F.when(g == 1, 1).otherwise(0)).alias("c1"),
+    )
+
+
+def _chi2_term(c0: Column, c1: Column, t0: Column, t1: Column) -> Column:
+    """One category's chi-square homogeneity contribution: sum over its
+    two cells of (observed - expected)^2 / expected, expected = row
+    total x column total / grand total."""
+    rowtot = c0 + c1
+    grand = t0 + t1
+    e0 = rowtot * t0 / grand
+    e1 = rowtot * t1 / grand
+    return (c0 - e0) ** 2 / e0 + (c1 - e1) ** 2 / e1
+
+
+def _divergence_measures(epsilon: float, round_digits: int) -> list[Column]:
+    """The (psi, chi2, dof, jsd) aggregates over rows of per-bin counts
+    (c0, c1) carrying their population totals (t0, t1). PSI clamps
+    empty-bin probabilities to ``epsilon``; JSD needs no clamp (a bin
+    empty on one side contributes only through the mixture m, with
+    0 * ln 0 = 0); chi2 runs over the observed bins (dof = bins - 1)."""
+    c0, c1, t0, t1 = (F.col(c) for c in ("c0", "c1", "t0", "t1"))
+    p_raw, q_raw = c0 / t0, c1 / t1
+    p = F.greatest(p_raw, F.lit(epsilon))
+    q = F.greatest(q_raw, F.lit(epsilon))
+    m = (p_raw + q_raw) / 2
+    kl_p = F.when(p_raw > 0, p_raw * F.log(p_raw / m)).otherwise(F.lit(0.0))
+    kl_q = F.when(q_raw > 0, q_raw * F.log(q_raw / m)).otherwise(F.lit(0.0))
+    return [
+        F.round(F.sum((p - q) * F.log(p / q)), round_digits).alias("psi"),
+        F.round(F.sum(_chi2_term(c0, c1, t0, t1)), round_digits).alias("chi2"),
+        (F.count(F.lit(1)) - 1).cast("int").alias("dof"),
+        F.round(F.sum((kl_p + kl_q) / 2), round_digits).alias("jsd"),
+    ]
 
 
 def quantile_sketch(
@@ -70,12 +121,9 @@ def histogram_counts(
     """Exact fixed-bin histogram: (bin, n). Values outside [lo, hi)
     clamp into the edge bins. One groupBy — partial aggregation makes
     the shuffle O(nbins) per partition."""
-    width = (hi - lo) / nbins
-    b = F.floor((F.col(column).cast("double") - F.lit(lo)) / F.lit(width))
-    b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
     return (
         df.where(F.col(column).isNotNull())
-        .groupBy(b.cast("int").alias("bin"))
+        .groupBy(_bin(column, lo, hi, nbins).alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -110,33 +158,17 @@ def psi_df(
     epsilon: float = 1e-6,
 ) -> DataFrame:
     """Fully-distributed PSI between the ``group_col==0`` (expected)
-    and ``group_col==1`` (actual) populations of ``column``: one
-    groupBy builds BOTH fixed-bin histograms (exact integer counts),
-    the tiny nbins-row result is broadcast-joined to its own totals,
-    and the epsilon-smoothed sum((p-q)*ln(p/q)) happens in the engine —
-    no driver-side collect, so it composes into larger plans. Result:
-    one row (psi double, rounded to 6dp for cross-engine determinism).
+    and ``group_col==1`` (actual) populations of ``column``: the
+    ``psi`` column of :func:`divergence_report` (column pruning drops
+    the other aggregates), so no driver-side collect and it composes
+    into larger plans. Result: one row (psi double, rounded to 6dp for
+    cross-engine determinism).
 
     Matches ``psi()`` exactly: bins empty on one side clamp to
     ``epsilon``; bins empty on both sides contribute 0."""
-    width = (hi - lo) / nbins
-    b = F.floor((F.col(column).cast("double") - F.lit(lo)) / F.lit(width))
-    b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
-    g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    agg = (
-        df.where(F.col(column).isNotNull())
-        .groupBy(b.cast("int").alias("bin"))
-        .agg(
-            F.sum(F.when(g == 0, 1).otherwise(0)).alias("c0"),
-            F.sum(F.when(g == 1, 1).otherwise(0)).alias("c1"),
-        )
-    )
-    tot = agg.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
-    j = agg.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c0") / F.col("t0"), F.lit(epsilon))
-    q = F.greatest(F.col("c1") / F.col("t1"), F.lit(epsilon))
-    contrib = (p - q) * F.log(p / q)
-    return j.agg(F.round(F.sum(contrib), 6).alias("psi"))
+    return divergence_report(
+        df, column, group_col, lo, hi, nbins, epsilon=epsilon
+    ).select("psi")
 
 
 def ks_exact_df(
@@ -210,14 +242,7 @@ def _bucketed_cdf_frame(
     from pyspark.sql import Window
 
     vc = F.col(column).cast("double")
-    g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    pts = df.where(vc.isNotNull()).select(
-        vc.alias("v"), F.when(g == 0, 0).otherwise(1).alias("g")
-    )
-    agg = pts.groupBy("v").agg(
-        F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).alias("c0"),
-        F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("c1"),
-    )
+    agg = _two_sample_counts(df.where(vc.isNotNull()), [vc.alias("v")], group_col)
     if persist:
         agg = agg.persist()
     nb = max(int(num_buckets), 1)
@@ -371,29 +396,17 @@ def chi2_drift_df(
     1-row totals frame broadcasts back. Counts stay integer-exact —
     the only float work is the final per-category expression, rounded
     before emission so cross-engine low bits cannot differ."""
-    g = F.col(group_col)
-    counts = (
-        df.where(F.col(col).isNotNull())
-        .groupBy(F.col(col).alias("category"))
-        .agg(
-            F.sum(F.when(g == 0, 1).otherwise(0)).alias("n0"),
-            F.sum(F.when(g == 1, 1).otherwise(0)).alias("n1"),
-        )
+    counts = _two_sample_counts(
+        df.where(F.col(col).isNotNull()), [F.col(col).alias("category")], group_col
     )
-    totals = counts.agg(
-        F.sum("n0").alias("_t0"), F.sum("n1").alias("_t1")
-    )
-    rowtot = F.col("n0") + F.col("n1")
-    grand = F.col("_t0") + F.col("_t1")
-    e0 = rowtot * F.col("_t0") / grand
-    e1 = rowtot * F.col("_t1") / grand
-    contrib = (F.col("n0") - e0) ** 2 / e0 + (F.col("n1") - e1) ** 2 / e1
+    totals = counts.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
+    contrib = _chi2_term(*(F.col(c) for c in ("c0", "c1", "t0", "t1")))
     return (
         counts.crossJoin(F.broadcast(totals))
         .select(
             "category",
-            F.col("n0").cast("long").alias("n0"),
-            F.col("n1").cast("long").alias("n1"),
+            F.col("c0").cast("long").alias("n0"),
+            F.col("c1").cast("long").alias("n1"),
             F.round(contrib, round_digits).alias("contrib"),
         )
         .orderBy("category")
@@ -414,48 +427,21 @@ def divergence_report(
     """PSI + Pearson chi-square + Jensen-Shannon from ONE histogram
     pass: the fixed-bin counts are the sufficient statistic for all
     three, so a drift dashboard that wants the whole family pays one
-    scan + one nbins-row exchange instead of three (the standalone
-    psi_df / chi2_drift_df / js_divergence_df each rebuild the same
-    histogram). Values are identical to the standalone operators over
-    the same bins — each formula is reproduced term-for-term,
-    including psi_df's epsilon clamp and JSD's native zero handling;
-    chi2 here runs over the BINS as its categories (dof = observed
-    bins - 1). Result: one row (psi, chi2, dof, jsd)."""
-    width = (hi - lo) / nbins
-    b = F.floor((F.col(column).cast("double") - F.lit(lo)) / F.lit(width))
-    b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
-    g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    agg = (
-        df.where(F.col(column).isNotNull())
-        .groupBy(b.cast("int").alias("bin"))
-        .agg(
-            F.sum(F.when(g == 0, 1).otherwise(0)).alias("c0"),
-            F.sum(F.when(g == 1, 1).otherwise(0)).alias("c1"),
-        )
+    scan + one nbins-row exchange. :func:`psi_df` and
+    :func:`js_divergence_df` are projections of this report; chi2 here
+    runs over the BINS as its categories (dof = observed bins - 1),
+    with :func:`chi2_drift_df`'s homogeneity table. Shape: one bin
+    groupBy, its totals broadcast back, one global aggregate (so empty
+    input still gives one all-NULL row). Result: one row
+    (psi, chi2, dof, jsd)."""
+    agg = _two_sample_counts(
+        df.where(F.col(column).isNotNull()),
+        [_bin(column, lo, hi, nbins).alias("bin")],
+        group_col,
     )
     tot = agg.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
-    j = agg.crossJoin(F.broadcast(tot))
-    p_raw = F.col("c0") / F.col("t0")
-    q_raw = F.col("c1") / F.col("t1")
-    # PSI (psi_df's clamp)
-    p = F.greatest(p_raw, F.lit(epsilon))
-    q = F.greatest(q_raw, F.lit(epsilon))
-    psi_term = (p - q) * F.log(p / q)
-    # chi-square homogeneity over the bins (chi2_drift_df's table)
-    rowtot = F.col("c0") + F.col("c1")
-    grand = F.col("t0") + F.col("t1")
-    e0 = rowtot * F.col("t0") / grand
-    e1 = rowtot * F.col("t1") / grand
-    chi2_term = (F.col("c0") - e0) ** 2 / e0 + (F.col("c1") - e1) ** 2 / e1
-    # JSD (js_divergence_df's zero convention)
-    m = (p_raw + q_raw) / 2
-    kl_p = F.when(p_raw > 0, p_raw * F.log(p_raw / m)).otherwise(F.lit(0.0))
-    kl_q = F.when(q_raw > 0, q_raw * F.log(q_raw / m)).otherwise(F.lit(0.0))
-    return j.agg(
-        F.round(F.sum(psi_term), round_digits).alias("psi"),
-        F.round(F.sum(chi2_term), round_digits).alias("chi2"),
-        (F.count(F.lit(1)) - 1).cast("int").alias("dof"),
-        F.round(F.sum((kl_p + kl_q) / 2), round_digits).alias("jsd"),
+    return agg.crossJoin(F.broadcast(tot)).agg(
+        *_divergence_measures(epsilon, round_digits)
     )
 
 
@@ -472,71 +458,36 @@ def divergence_report_multi(
     exchange: a drift dashboard monitoring F features of a 10^12-row
     table pays one scan + one hash exchange on (feature, bin) — F·nbins
     grouping keys — instead of F separate scans and exchanges.  The
-    melt is a zero-shuffle projection (array of (feature, bin) structs,
-    NULL values filtered engine-side, one explode); per-feature totals
-    are a second tiny aggregation over the F·nbins partial counts and
-    broadcast back.  Formulas are term-for-term identical to
-    :func:`divergence_report` (psi_df's epsilon clamp, chi2 over
-    observed bins, JSD's native zero handling), so a single-feature
-    call returns exactly ``divergence_report``'s row.
+    melt is a zero-shuffle projection (one inline of an array of
+    (feature, bin) structs, then rows whose value was NULL dropped);
+    per-feature totals are a second tiny aggregation over the F·nbins
+    partial counts and broadcast back.  The measures are
+    :func:`divergence_report`'s, so a single-feature call returns
+    exactly its row.
 
     ``features`` maps column name -> (lo, hi) fixed-bin bounds (out-of-
     range values clamp into the edge bins, same as every fixed-bin
     operator here).  Result: one row per feature
     (feature, psi, chi2, dof, jsd), ordered by feature."""
     g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    entries = []
-    for name in sorted(features):
-        lo, hi = features[name]
-        width = (float(hi) - float(lo)) / nbins
-        b = F.floor(
-            (F.col(name).cast("double") - F.lit(float(lo))) / F.lit(width)
+    entries = [
+        F.struct(
+            F.lit(name).alias("feature"),
+            F.when(F.col(name).isNotNull(), _bin(name, lo, hi, nbins)).alias("bin"),
         )
-        b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1)).cast("int")
-        entries.append(
-            F.when(
-                F.col(name).isNotNull(),
-                F.struct(F.lit(name).alias("feature"), b.alias("bin")),
-            )
-        )
-    melted = (
-        df.select(
-            g.alias("_g"),
-            F.explode(
-                F.filter(F.array(*entries), lambda x: x.isNotNull())
-            ).alias("fb"),
-        )
-        .select("_g", F.col("fb.feature").alias("feature"), F.col("fb.bin").alias("bin"))
+        for name, (lo, hi) in sorted(features.items())
+    ]
+    melted = df.select(g.alias("_g"), F.inline(F.array(*entries))).where(
+        F.col("bin").isNotNull()
     )
-    agg = melted.groupBy("feature", "bin").agg(
-        F.sum(F.when(F.col("_g") == 0, 1).otherwise(0)).alias("c0"),
-        F.sum(F.when(F.col("_g") == 1, 1).otherwise(0)).alias("c1"),
-    )
+    agg = _two_sample_counts(melted, ["feature", "bin"], "_g")
     tot = agg.groupBy("feature").agg(
         F.sum("c0").alias("t0"), F.sum("c1").alias("t1")
     )
-    j = agg.join(F.broadcast(tot), "feature")
-    p_raw = F.col("c0") / F.col("t0")
-    q_raw = F.col("c1") / F.col("t1")
-    p = F.greatest(p_raw, F.lit(epsilon))
-    q = F.greatest(q_raw, F.lit(epsilon))
-    psi_term = (p - q) * F.log(p / q)
-    rowtot = F.col("c0") + F.col("c1")
-    grand = F.col("t0") + F.col("t1")
-    e0 = rowtot * F.col("t0") / grand
-    e1 = rowtot * F.col("t1") / grand
-    chi2_term = (F.col("c0") - e0) ** 2 / e0 + (F.col("c1") - e1) ** 2 / e1
-    m = (p_raw + q_raw) / 2
-    kl_p = F.when(p_raw > 0, p_raw * F.log(p_raw / m)).otherwise(F.lit(0.0))
-    kl_q = F.when(q_raw > 0, q_raw * F.log(q_raw / m)).otherwise(F.lit(0.0))
     return (
-        j.groupBy("feature")
-        .agg(
-            F.round(F.sum(psi_term), round_digits).alias("psi"),
-            F.round(F.sum(chi2_term), round_digits).alias("chi2"),
-            (F.count(F.lit(1)) - 1).cast("int").alias("dof"),
-            F.round(F.sum((kl_p + kl_q) / 2), round_digits).alias("jsd"),
-        )
+        agg.join(F.broadcast(tot), "feature")
+        .groupBy("feature")
+        .agg(*_divergence_measures(epsilon, round_digits))
         .orderBy("feature")
     )
 
@@ -557,30 +508,10 @@ def js_divergence_df(
     family (PSI is unbounded and blows up on empty bins; JSD lives in
     [0, ln 2] and handles zeros natively because a bin empty on one
     side contributes only through the mixture m = (p+q)/2, so no
-    epsilon clamp is needed). Same plan shape as :func:`psi_df`: ONE
-    groupBy builds both integer-exact histograms, totals broadcast
-    back, the nbins-term sum reduces engine-side. Result: one row
-    (jsd double, natural log, rounded for cross-engine determinism)."""
-    width = (hi - lo) / nbins
-    b = F.floor((F.col(column).cast("double") - F.lit(lo)) / F.lit(width))
-    b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
-    g = group_col if not isinstance(group_col, str) else F.col(group_col)
-    agg = (
-        df.where(F.col(column).isNotNull())
-        .groupBy(b.cast("int").alias("bin"))
-        .agg(
-            F.sum(F.when(g == 0, 1).otherwise(0)).alias("c0"),
-            F.sum(F.when(g == 1, 1).otherwise(0)).alias("c1"),
-        )
-    )
-    tot = agg.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
-    j = agg.crossJoin(F.broadcast(tot))
-    p = F.col("c0") / F.col("t0")
-    q = F.col("c1") / F.col("t1")
-    m = (p + q) / 2
-    # x * ln(x/m) with the 0 * ln(0) = 0 convention
-    kl_p = F.when(p > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-    kl_q = F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-    return j.agg(
-        F.round(F.sum((kl_p + kl_q) / 2), round_digits).alias("jsd")
-    )
+    epsilon clamp is needed). The ``jsd`` column of
+    :func:`divergence_report` (column pruning drops the other
+    aggregates). Result: one row (jsd double, natural log, rounded for
+    cross-engine determinism)."""
+    return divergence_report(
+        df, column, group_col, lo, hi, nbins, round_digits=round_digits
+    ).select("jsd")

@@ -555,17 +555,15 @@ def rolling_hash_fingerprints(
     wherever the shared content sits. One projection, JVM-side only."""
     from .dedup import _spread
 
-    all_h = (
-        f"transform(sequence(1, greatest(length({text_col}) - {window - 1}, 1)), "
-        f"i -> cast(conv(substring(md5(substring({text_col}, i, {window})), 1, 8), 16, 10) as bigint))"
-    )
-    h = f"filter({all_h}, h -> (h % {keep_every}) = 0)"
     # _spread: one md5 per window POSITION is the heaviest per-row
     # projection in the text family — an under-partitioned scan would
     # run it in a single task (guide §2.5 input skew; no-op when the
     # scan already has >= defaultParallelism partitions)
     return _spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.expr(h).alias("hashes")
+        F.col(id_col),
+        F.filter(
+            _window_hashes_expr(text_col, window), lambda h: h % keep_every == 0
+        ).alias("hashes"),
     )
 
 

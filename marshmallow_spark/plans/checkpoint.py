@@ -88,12 +88,16 @@ class CheckpointedRun:
         buckets = list(buckets)
         sub = df.where(self._bucket_col().isin(buckets))
         violations = self.suite.violations(sub).withColumn(
-            "bucket", F.pmod(F.hash("clip_id"), F.lit(self.num_buckets))
+            "bucket", self._bucket_col()
         )
         vpath = os.path.join(self.output_dir, "violations")
+        # dynamic overwrite replaces only the buckets written here, so a
+        # bucket re-run after a kill that landed its rows but not its
+        # manifest does not land them twice
         (
             violations.repartition("bucket")
-            .write.mode("append")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(vpath)
         )
@@ -131,8 +135,12 @@ class CheckpointedRun:
                 "digest": int(vstats[b].digest) if b in vstats else 0,
                 "passed": b not in vstats,
             }
-            with open(self._manifest_path(b), "w") as f:
+            # write-then-rename: a kill mid-dump leaves no manifest, so
+            # the bucket stays pending instead of reading as done
+            path = self._manifest_path(b)
+            with open(path + ".tmp", "w") as f:
                 json.dump(manifest, f)
+            os.replace(path + ".tmp", path)
             out.append(manifest)
         return out
 

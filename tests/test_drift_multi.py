@@ -119,3 +119,28 @@ def test_audio_feature_drift_detects_releveling(spark, clips):
     assert out["rms_dbfs"]["psi"] > 1.0
     assert out["zero_crossing_rate"]["psi"] < 0.05
     assert out["rms_dbfs"]["psi"] > 10 * out["zero_crossing_rate"]["psi"]
+
+
+def test_drift_has_one_fixed_bin_scaffold():
+    """The fixed-bin operators share one bin expression (_bin) and one
+    two-population count (_two_sample_counts), and the multi-feature
+    melt is a plain inline: drift.py must hold exactly one floor call,
+    one .alias("c0") and no F.filter, so a second copy of the scaffold
+    cannot grow back."""
+    import ast
+
+    from marshmallow_spark.operators import drift
+
+    with open(drift.__file__) as f:
+        tree = ast.parse(f.read())
+    floors = c0_aliases = filters = 0
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+            continue
+        attr, owner = node.func.attr, node.func.value
+        floors += attr == "floor"
+        c0_aliases += attr == "alias" and [
+            a.value for a in node.args if isinstance(a, ast.Constant)
+        ] == ["c0"]
+        filters += attr == "filter" and isinstance(owner, ast.Name) and owner.id == "F"
+    assert (floors, c0_aliases, filters) == (1, 1, 0)

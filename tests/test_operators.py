@@ -303,6 +303,31 @@ def test_wasserstein1_df_matches_reference_and_shift(spark):
             assert abs(got - want) < 1e-9, (nb, persist, got, want)
 
 
+def test_two_sample_drift_ignores_rows_outside_groups_0_and_1(spark):
+    """Rows whose group is NULL or any value other than 0/1 belong to
+    neither population: adding 50 NULL-group and 50 group-2 rows to a
+    0/1 frame leaves KS, W1 and PSI exactly as they were."""
+    from marshmallow_spark.operators.drift import (
+        ks_exact_df,
+        psi_df,
+        wasserstein1_df,
+    )
+
+    rows = [(float(i % 50), i % 2) for i in range(200)]
+    noise = [(100.0 + i, None) for i in range(50)] + [(-50.0 - i, 2) for i in range(50)]
+    clean = spark.createDataFrame(rows, "v double, g int")
+    dirty = spark.createDataFrame(rows + noise, "v double, g int")
+
+    def measures(df):
+        return (
+            ks_exact_df(df, "v", "g", num_buckets=8).first().ks,
+            wasserstein1_df(df, "v", "g", num_buckets=8).first().w1,
+            psi_df(df, "v", "g", 0.0, 50.0, 10).first().psi,
+        )
+
+    assert measures(dirty) == measures(clean)
+
+
 def test_zscore_outliers_planted_and_degenerate(spark):
     """zscore_outliers: a planted extreme value is flagged with the
     right z; zero-variance and single-member groups emit nothing

@@ -85,6 +85,47 @@ def test_checkpoint_resume(spark, suite, tmp_path):
     assert run.run(df) == []
 
 
+def test_checkpoint_resume_after_kill_mid_commit(spark, tmp_path, monkeypatch):
+    """A run killed after its violation rows landed but before the
+    manifests (or in the middle of writing one) resumes to exactly the
+    single-shot result: no bucket's rows land twice, and a half-written
+    manifest never marks its bucket done."""
+    from marshmallow_spark.plans import checkpoint
+
+    suite = ClipValidationSuite(codecs_dim(spark), check_audio=False)
+    df = synth_clips(spark, 1500, num_partitions=4)
+    full = suite.violations(df).collect()
+    want = {(r.clip_id, r.field, r.message) for r in full}
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed")
+
+    def dump_killed(obj, f):
+        f.write('{"bucket": ')
+        raise RuntimeError("killed")
+
+    for i, (target, name, kill) in enumerate(
+        [
+            (CheckpointedRun, "_manifest_path", killed),
+            (checkpoint.json, "dump", dump_killed),
+        ]
+    ):
+        out = str(tmp_path / f"run{i}")
+        with monkeypatch.context() as m:
+            m.setattr(target, name, kill)
+            with pytest.raises(RuntimeError, match="killed"):
+                CheckpointedRun(suite, out, num_buckets=8).run(df)
+        run = CheckpointedRun(suite, out, num_buckets=8)
+        assert run.completed_buckets() == set()
+        run.run(df)
+        got = run.all_violations(spark).collect()
+        assert len(got) == len(full)
+        assert {(r.clip_id, r.field, r.message) for r in got} == want
+        ms = run.manifests()
+        assert len(ms) == 8
+        assert sum(m["violations"] for m in ms) == len(full)
+
+
 def test_speech_rate_and_audio_dedup_checks(spark):
     """The opt-in validation-tier extras: a transcript wildly out of
     proportion to the claimed duration is a speech_rate violation, and

@@ -636,7 +636,7 @@ def test_q80_chi2_broadcast_totals(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert shuffle_exchanges(plan) <= 3, plan
-    assert "partial_sum" in plan or "partial_count" in plan.lower() or True
+    assert "partial_sum" in plan, plan
 
 
 def test_q85_divergence_report_single_scan(spark, sf_dir):
@@ -651,7 +651,7 @@ def test_q85_divergence_report_single_scan(spark, sf_dir):
 
 def test_q86_divergence_multi_one_melt_exchange(spark, sf_dir):
     """The multi-feature report: the melt is a zero-shuffle projection
-    (array + filter + explode — no per-feature scans), ALL features'
+    (array + inline + filter — no per-feature scans), ALL features'
     histograms ride ONE (feature, bin) exchange, the totals branch
     REUSES that exchange instead of re-scanning, and totals come back
     via broadcast — so at 10^12 rows the source is read once no matter
