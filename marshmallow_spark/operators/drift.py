@@ -25,10 +25,15 @@ from pyspark.sql import functions as F
 
 def _bin(column: str, lo: float, hi: float, nbins: int) -> Column:
     """Clamped int fixed-bin index of ``column`` over [lo, hi): values
-    outside the range land in the edge bins."""
+    outside the range land in the edge bins. NULL for a NULL or a
+    non-numeric value, which every fixed-bin operator then drops."""
     width = (float(hi) - float(lo)) / nbins
-    b = F.floor((F.col(column).cast("double") - F.lit(float(lo))) / F.lit(width))
-    return F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1)).cast("int")
+    v = F.col(column).try_cast("double")
+    b = F.floor((v - F.lit(float(lo))) / F.lit(width))
+    # greatest/least skip NULLs, so the clamp alone would bin NULL as 0
+    return F.when(
+        v.isNotNull(), F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
+    ).cast("int")
 
 
 def _two_sample_counts(df: DataFrame, keys: list, group_col) -> DataFrame:
@@ -42,10 +47,18 @@ def _two_sample_counts(df: DataFrame, keys: list, group_col) -> DataFrame:
     )
 
 
+def _nonzero(c: Column) -> Column:
+    """``c``, or NULL where it is 0: a population total that divides,
+    so an empty population yields NULL measures, not DIVIDE_BY_ZERO."""
+    return F.nullif(c, F.lit(0))
+
+
 def _chi2_term(c0: Column, c1: Column, t0: Column, t1: Column) -> Column:
     """One category's chi-square homogeneity contribution: sum over its
     two cells of (observed - expected)^2 / expected, expected = row
-    total x column total / grand total."""
+    total x column total / grand total (NULL when either population is
+    empty)."""
+    t0, t1 = _nonzero(t0), _nonzero(t1)
     rowtot = c0 + c1
     grand = t0 + t1
     e0 = rowtot * t0 / grand
@@ -58,14 +71,16 @@ def _divergence_measures(epsilon: float, round_digits: int) -> list[Column]:
     (c0, c1) carrying their population totals (t0, t1). PSI clamps
     empty-bin probabilities to ``epsilon``; JSD needs no clamp (a bin
     empty on one side contributes only through the mixture m, with
-    0 * ln 0 = 0); chi2 runs over the observed bins (dof = bins - 1)."""
+    0 * ln 0 = 0); chi2 runs over the observed bins (dof = bins - 1).
+    psi, chi2 and jsd are NULL when either population is empty."""
     c0, c1, t0, t1 = (F.col(c) for c in ("c0", "c1", "t0", "t1"))
-    p_raw, q_raw = c0 / t0, c1 / t1
-    p = F.greatest(p_raw, F.lit(epsilon))
-    q = F.greatest(q_raw, F.lit(epsilon))
+    p_raw, q_raw = c0 / _nonzero(t0), c1 / _nonzero(t1)
+    # the clamps and the 0 * ln 0 = 0 terms keep a NULL probability NULL
+    p = F.when(p_raw < epsilon, F.lit(epsilon)).otherwise(p_raw)
+    q = F.when(q_raw < epsilon, F.lit(epsilon)).otherwise(q_raw)
     m = (p_raw + q_raw) / 2
-    kl_p = F.when(p_raw > 0, p_raw * F.log(p_raw / m)).otherwise(F.lit(0.0))
-    kl_q = F.when(q_raw > 0, q_raw * F.log(q_raw / m)).otherwise(F.lit(0.0))
+    kl_p = F.when(p_raw == 0, F.lit(0.0)).otherwise(p_raw * F.log(p_raw / m))
+    kl_q = F.when(q_raw == 0, F.lit(0.0)).otherwise(q_raw * F.log(q_raw / m))
     return [
         F.round(F.sum((p - q) * F.log(p / q)), round_digits).alias("psi"),
         F.round(F.sum(_chi2_term(c0, c1, t0, t1)), round_digits).alias("chi2"),
@@ -121,9 +136,10 @@ def histogram_counts(
     """Exact fixed-bin histogram: (bin, n). Values outside [lo, hi)
     clamp into the edge bins. One groupBy — partial aggregation makes
     the shuffle O(nbins) per partition."""
+    b = _bin(column, lo, hi, nbins)
     return (
-        df.where(F.col(column).isNotNull())
-        .groupBy(_bin(column, lo, hi, nbins).alias("bin"))
+        df.where(b.isNotNull())
+        .groupBy(b.alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -285,8 +301,8 @@ def _bucketed_cdf_frame(
     )
     tot = btot.agg(F.sum("b0").alias("n0"), F.sum("b1").alias("n1"))
     joined = run.join(F.broadcast(off), "bucket").crossJoin(F.broadcast(tot))
-    f0 = ((F.col("o0") + F.col("r0")) / F.col("n0")).alias("f0")
-    f1 = ((F.col("o1") + F.col("r1")) / F.col("n1")).alias("f1")
+    f0 = ((F.col("o0") + F.col("r0")) / _nonzero(F.col("n0"))).alias("f0")
+    f1 = ((F.col("o1") + F.col("r1")) / _nonzero(F.col("n1"))).alias("f1")
     return joined.select("bucket", "v", f0, f1), agg
 
 
@@ -338,7 +354,7 @@ def wasserstein1_df(
     )
     out = gapped.agg(
         F.round(
-            F.sum(F.when(F.col("gap").isNotNull(), F.col("d") * F.col("gap")).otherwise(0.0)),
+            F.sum(F.col("d") * F.coalesce(F.col("gap"), F.lit(0.0))),
             round_digits,
         ).alias("w1")
     )
@@ -434,11 +450,8 @@ def divergence_report(
     groupBy, its totals broadcast back, one global aggregate (so empty
     input still gives one all-NULL row). Result: one row
     (psi, chi2, dof, jsd)."""
-    agg = _two_sample_counts(
-        df.where(F.col(column).isNotNull()),
-        [_bin(column, lo, hi, nbins).alias("bin")],
-        group_col,
-    )
+    b = _bin(column, lo, hi, nbins)
+    agg = _two_sample_counts(df.where(b.isNotNull()), [b.alias("bin")], group_col)
     tot = agg.agg(F.sum("c0").alias("t0"), F.sum("c1").alias("t1"))
     return agg.crossJoin(F.broadcast(tot)).agg(
         *_divergence_measures(epsilon, round_digits)
@@ -473,7 +486,7 @@ def divergence_report_multi(
     entries = [
         F.struct(
             F.lit(name).alias("feature"),
-            F.when(F.col(name).isNotNull(), _bin(name, lo, hi, nbins)).alias("bin"),
+            _bin(name, lo, hi, nbins).alias("bin"),
         )
         for name, (lo, hi) in sorted(features.items())
     ]

@@ -16,7 +16,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,10 +48,19 @@ def referential_check(
 ) -> DataFrame:
     """Violation-row shape (row_key, field, message) for orphan FKs."""
     bad = referential_violations(df, fk, dim, pk, broadcast=broadcast)
-    return bad.select(
-        F.col(row_key).cast("string").alias("row_key"),
+    return bad.select(*violation_columns(fk, row_key))
+
+
+def violation_columns(
+    fk: str, row_key: str, key_name: str = "row_key"
+) -> list[Column]:
+    """The (``key_name``, field, message) projection of
+    ``referential_violations`` output; callers that run the check
+    repeatedly build it once."""
+    return [
+        F.col(row_key).cast("string").alias(key_name),
         F.lit(fk).alias("field"),
         F.concat(
             F.lit("Value not present in reference table: "), F.col(fk).cast("string"), F.lit(".")
         ).alias("message"),
-    )
+    ]

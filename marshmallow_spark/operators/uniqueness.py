@@ -20,7 +20,7 @@ Scale notes (10^12 rows, skewed keys — the north_rule case):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -69,10 +69,17 @@ def uniqueness_violations(
     """Violation-row shape (row_key, field, message) for duplicated
     keys, message matching marshmallow's validator vocabulary."""
     dups = duplicate_keys(df, key, salted=salted, num_salts=num_salts)
-    return dups.select(
-        F.col(key).cast("string").alias("row_key"),
+    return dups.select(*violation_columns(key))
+
+
+def violation_columns(key: str, key_name: str = "row_key") -> list[Column]:
+    """The (``key_name``, field, message) projection of
+    ``duplicate_keys`` output; callers that run the check repeatedly
+    build it once."""
+    return [
+        F.col(key).cast("string").alias(key_name),
         F.lit(key).alias("field"),
         F.concat(
             F.lit("Duplicate key: appears "), F.col("dup_count"), F.lit(" times.")
         ).alias("message"),
-    )
+    ]

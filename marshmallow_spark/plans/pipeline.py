@@ -17,13 +17,14 @@ Violation streams are ``unionByName``-ed (merge_errors parity, E3/A10).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from types import SimpleNamespace
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import fields, validate
 from ..functions import audio
-from ..operators.referential import referential_check
-from ..operators.uniqueness import uniqueness_violations
+from ..operators import referential, uniqueness
 from ..schema import EXCLUDE, Schema
 
 
@@ -114,6 +115,52 @@ class ClipValidationSuite:
         self.audio_dedup = audio_dedup
         self.speech_rate_bounds = speech_rate_bounds
         self.transcript_consistency = transcript_consistency
+        self._cols: SimpleNamespace | None = None
+
+    def _columns(self) -> SimpleNamespace:
+        """The suite's fixed Columns, built on the first run and bound to
+        every later input with plain DataFrame calls: each Column method
+        is a py4j round trip, and rebuilding them per run cost more
+        than the DataFrame calls themselves."""
+        if self._cols is None:
+
+            def tag(check: str) -> Column:
+                return F.lit(check).alias("check")
+
+            message = [F.col("field"), F.col("message")]
+            self._cols = SimpleNamespace(
+                structural=[
+                    F.col("clip_id").cast("string").alias("clip_id"),
+                    *message,
+                    tag("structural"),
+                ],
+                uniqueness=[
+                    *uniqueness.violation_columns("clip_id", "clip_id"),
+                    tag("uniqueness"),
+                ],
+                referential=[
+                    *referential.violation_columns("codec", "clip_id", "clip_id"),
+                    tag("referential"),
+                ],
+                decodable=(
+                    F.col("sr_hz").isin(8000, 16000, 22050, 44100)
+                    & (F.col("dur_ms") > 0)
+                    & F.col("codec").isin(*audio.KNOWN_CODECS)
+                    & F.col("bytes").isNotNull()
+                ),
+                audio=[F.col("clip_id"), *message, tag("audio")],
+                nviol=F.count(F.lit(1)).alias("nviol"),
+                verdict_aggs=[
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum((F.col("nviol") > 0).cast("long")).alias("failed_rows"),
+                    F.sum(F.coalesce(F.col("nviol"), F.lit(0))).alias("violation_count"),
+                ],
+                verdict_flags={
+                    "passed_rows": F.col("rows") - F.col("failed_rows"),
+                    "passed": F.col("failed_rows") == 0,
+                },
+            )
+        return self._cols
 
     def violations_stream(
         self,
@@ -162,49 +209,25 @@ class ClipValidationSuite:
     ) -> DataFrame:
         """Union of every check's violation rows (clip_id, field,
         message, check)."""
+        cols = self._columns()
         structural = self.schema.validate_df(df.drop("bytes"))
         parts: list[DataFrame] = [
-            structural.violations.select(
-                F.col("clip_id").cast("string").alias("clip_id"),
-                "field",
-                "message",
-                F.lit("structural").alias("check"),
-            )
+            structural.violations.select(*cols.structural)
         ]
 
         if not stateless_only:
-            uniq = uniqueness_violations(
+            uniq = uniqueness.duplicate_keys(
                 df, "clip_id", salted=self.salted_uniqueness
-            ).select(
-                F.col("row_key").alias("clip_id"),
-                "field",
-                "message",
-                F.lit("uniqueness").alias("check"),
-            )
+            ).select(*cols.uniqueness)
             parts.append(uniq)
 
         if self.codecs_dim is not None:
-            ref = referential_check(
-                df.select("clip_id", "codec"),
-                "codec",
-                self.codecs_dim,
-                "codec",
-                row_key="clip_id",
-                broadcast=True,
-            ).select(
-                F.col("row_key").alias("clip_id"),
-                "field",
-                "message",
-                F.lit("referential").alias("check"),
-            )
+            ref = referential.referential_violations(
+                df, "codec", self.codecs_dim, "codec", broadcast=True
+            ).select(*cols.referential)
             parts.append(ref)
 
-        decodable_pred = (
-            F.col("sr_hz").isin(8000, 16000, 22050, 44100)
-            & (F.col("dur_ms") > 0)
-            & F.col("codec").isin(*audio.KNOWN_CODECS)
-            & F.col("bytes").isNotNull()
-        )
+        decodable_pred = cols.decodable
         if self.check_audio and self.quality_thresholds:
             # one decode of ``bytes`` serves both audio checks; the
             # invariant's structural pre-filter rides into the kernel
@@ -223,9 +246,7 @@ class ClipValidationSuite:
             # skip_on_field_errors: decode only structurally-plausible rows
             inv = audio.audio_invariant_violations(
                 df.where(decodable_pred)
-            ).select(
-                "clip_id", "field", "message", F.lit("audio").alias("check")
-            )
+            ).select(*cols.audio)
             parts.append(inv)
         elif self.quality_thresholds:
             from ..functions.audio_quality import quality_violations
@@ -315,9 +336,10 @@ class ClipValidationSuite:
         """Per-partition pass/fail verdict rows (A6). Partition identity
         = pmod(hash(clip_id), shuffle partitions) — a *stable* bucket id
         (unlike spark_partition_id, it survives re-reads and resume)."""
+        cols = self._columns()
         nbuckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         v = violations if violations is not None else self.violations(df)
-        per_clip = v.groupBy("clip_id").agg(F.count(F.lit(1)).alias("nviol"))
+        per_clip = v.groupBy("clip_id").agg(cols.nviol)
         bucket = F.pmod(F.hash("clip_id"), F.lit(nbuckets)).alias("bucket")
         # per_clip is violation-rate-sized (sparse by construction — a
         # healthy pipeline violates on ~1% of clips), so broadcast it:
@@ -329,13 +351,8 @@ class ClipValidationSuite:
         joined = df.select("clip_id").join(F.broadcast(per_clip), "clip_id", "left")
         return (
             joined.groupBy(bucket)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum((F.col("nviol") > 0).cast("long")).alias("failed_rows"),
-                F.sum(F.coalesce(F.col("nviol"), F.lit(0))).alias("violation_count"),
-            )
-            .withColumn("passed_rows", F.col("rows") - F.col("failed_rows"))
-            .withColumn("passed", F.col("failed_rows") == 0)
+            .agg(*cols.verdict_aggs)
+            .withColumns(cols.verdict_flags)
         )
 
     def run(self, df: DataFrame, *, persist: bool = True) -> tuple[DataFrame, DataFrame]:

@@ -171,6 +171,35 @@ def _flatten_entries(entries: list[Column]) -> Column:
     return F.flatten(F.array_compact(F.array(*entries)))
 
 
+class _Compiled(typing.NamedTuple):
+    """One Schema compiled against one input StructType: every Column of
+    the annotated plan and of its violations projection. Building them
+    costs a py4j round trip per Column method; binding them to another
+    DataFrame of the same type is one ``select`` per stage."""
+
+    stage1: list[Column]
+    errs: Column
+    out_cols: list[str]
+    row_key: str
+    #: (filter, explode select, flatten select) of ``violations``
+    violations: tuple[Column, list[Column], list[Column]]
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        return df.select(*self.stage1).withColumn(_ERRS, self.errs)
+
+
+#: compiled entries kept per Schema instance; a schema fed ever-new
+#: input types (schema evolution) recompiles the oldest away
+_MEMO_SIZE = 16
+
+
+def _partial_key(partial) -> bool | tuple:
+    """Hashable memo-key form of a ``partial`` setting."""
+    if not partial or isinstance(partial, bool):
+        return bool(partial)
+    return tuple(partial)
+
+
 class SchemaOpts:
     """Meta options (parity: src/marshmallow/schema.py:192-246)."""
 
@@ -254,19 +283,14 @@ class ValidationResult:
     """The three output DataFrames of a validation pass plus driver-side
     error-shape reconstruction (E1-E7 in SURVEY.md §2.6)."""
 
-    def __init__(self, annotated: DataFrame, schema: "Schema", row_key: str):
+    def __init__(
+        self, annotated: DataFrame, schema: "Schema", compiled: "_Compiled"
+    ):
         self._annotated = annotated
         self._schema = schema
-        self.row_key = row_key
-        helper = [_ERRS, _FIELD_ERRS, _PID, _ROW_KEY, _MAL, _MALKEY]
-        self._out_cols = [
-            c
-            for c in annotated.columns
-            if c not in helper
-            and not c.startswith(_ORIG)
-            and not c.startswith(_PRESENT)
-            and not c.startswith(_KIND)
-        ]
+        self._compiled = compiled
+        self.row_key = compiled.row_key
+        self._out_cols = compiled.out_cols
 
     # -- DataFrames -------------------------------------------------------
     @property
@@ -274,26 +298,8 @@ class ValidationResult:
         """(row_key, field, message, partition_id) — one row per
         violating (row, check) pair; And-semantics collect every failure
         (V1), so multiple rows per key are expected."""
-        df = self._annotated
-        key = F.col(_ROW_KEY)
-        if _MALKEY in df.columns:
-            # malformed-JSON rows carry a recovered (or synthesized)
-            # key; well-formed rows keep the declared row key
-            key = F.coalesce(key, F.col(_MALKEY))
-        return (
-            df.where(F.size(_ERRS) > 0)
-            .select(
-                key.alias(self.row_key),
-                F.explode(_ERRS).alias("_e"),
-                F.col(_PID).alias("partition_id"),
-            )
-            .select(
-                self.row_key,
-                F.col("_e.field").alias("field"),
-                F.col("_e.message").alias("message"),
-                "partition_id",
-            )
-        )
+        where, explode, flat = self._compiled.violations
+        return self._annotated.where(where).select(*explode).select(*flat)
 
     @property
     def valid(self) -> DataFrame:
@@ -449,6 +455,7 @@ class Schema(metaclass=SchemaMeta):
         self.unknown = unknown if unknown is not None else self.opts.unknown
         self.row_key = row_key or self.opts.row_key
         self.context = context or {}
+        self._memo: dict[tuple, _Compiled] = {}
         self._init_fields()
 
     # -- field binding (parity: _init_fields, schema.py:949-1022) ---------
@@ -546,11 +553,12 @@ class Schema(metaclass=SchemaMeta):
         """Custom error sink hook (parity: schema.py:456-471)."""
 
     # -- compile helpers ---------------------------------------------------
-    def _partial_skip(self, name: str) -> bool:
-        if self.partial is True:
+    @staticmethod
+    def _partial_skip(name: str, partial) -> bool:
+        if partial is True:
             return True
-        if self.partial:
-            return name in self.partial
+        if partial:
+            return name in partial
         return False
 
     def _field_checks(
@@ -667,11 +675,30 @@ class Schema(metaclass=SchemaMeta):
         entries against the raw input; stage 2 adds cross-field
         (validates_schema) entries over the loaded columns.
         """
+        return self._bind(df, self.partial)[0]
+
+    def _bind(self, df: DataFrame, partial) -> tuple[DataFrame, _Compiled]:
+        """Run the PRE_LOAD hooks, then bind the compiled Columns for the
+        hooked frame's StructType (compiling them on first sight) to it.
+
+        The memo key is everything ``_compile`` reads: the input type
+        and the instance settings ``partial`` / ``unknown`` /
+        ``row_key``. Hooks run on every call — they are DataFrame
+        transforms, not part of the compiled plan."""
         for hook_name, opts in sorted(
             self._hooks.get(PRE_LOAD, []), key=lambda h: not h[1].get("pass_many", False)
         ):
             df = getattr(self, hook_name)(df)
+        key = (df.schema.json(), _partial_key(partial), self.unknown, self.row_key)
+        compiled = self._memo.get(key)
+        if compiled is None:
+            compiled = self._compile(df, partial)
+            if len(self._memo) >= _MEMO_SIZE:
+                del self._memo[next(iter(self._memo))]
+            self._memo[key] = compiled
+        return compiled.bind(df), compiled
 
+    def _compile(self, df: DataFrame, partial) -> _Compiled:
         columns = set(df.columns)
         if _ROW_KEY in columns:
             # caller (loads_df) pre-assigned row identity on the parsed
@@ -685,6 +712,7 @@ class Schema(metaclass=SchemaMeta):
         has_presence = _PRESENT in columns
         has_mal = _MAL in columns
         loaded_cols: list[Column] = []
+        loaded_names: list[str] = []
         entries: list[Column] = []
         if has_mal:
             # one-pass malformed-JSON: the row-level "Invalid input
@@ -747,7 +775,7 @@ class Schema(metaclass=SchemaMeta):
                 if (
                     has_key is not None
                     and field.required
-                    and not self._partial_skip(name)
+                    and not self._partial_skip(name, partial)
                 ):
                     entries.append(
                         _entry(
@@ -772,14 +800,16 @@ class Schema(metaclass=SchemaMeta):
                     )
                 )
                 loaded_cols.append(loaded.alias(attr))
+                loaded_names.append(attr)
             else:
                 # whole-column missing (SURVEY §7.3(2) missing-vs-NULL)
-                if field.required and not self._partial_skip(name):
+                if field.required and not self._partial_skip(name, partial):
                     entries.append(
                         _entry(name, F.lit(True), field.error_messages["required"])
                     )
                 if field.load_default is not MISSING:
                     loaded_cols.append(F.lit(field.load_default).alias(attr))
+                    loaded_names.append(attr)
 
         # unknown policy (parity: schema.py:674-688)
         extra = [
@@ -824,6 +854,7 @@ class Schema(metaclass=SchemaMeta):
                 )
         elif self.unknown == INCLUDE:
             loaded_cols.extend(F.col(c) for c in extra)
+            loaded_names.extend(extra)
 
         # carry raw columns only when some hook asked for them
         need_orig = any(
@@ -831,9 +862,9 @@ class Schema(metaclass=SchemaMeta):
             for tag in (POST_LOAD, VALIDATES_SCHEMA)
             for _, opts in self._hooks.get(tag, [])
         )
-        orig_cols = (
+        orig_names = (
             [
-                F.col(c).alias(_ORIG + c)
+                c
                 for c in df.columns
                 if not c.startswith(_ORIG)
                 and c not in (_ROW_KEY, _MAL, _MALKEY)
@@ -843,15 +874,15 @@ class Schema(metaclass=SchemaMeta):
             if need_orig
             else []
         )
-        mal_cols = [F.col(c) for c in (_MAL, _MALKEY) if c in columns]
-        stage1 = df.select(
+        mal_names = [c for c in (_MAL, _MALKEY) if c in columns]
+        stage1 = [
             row_key_col.alias(_ROW_KEY),
             F.spark_partition_id().alias(_PID),
             *loaded_cols,
-            *orig_cols,
-            *mal_cols,
+            *(F.col(c).alias(_ORIG + c) for c in orig_names),
+            *(F.col(c) for c in mal_names),
             _flatten_entries(entries).alias(_FIELD_ERRS),
-        )
+        ]
 
         # stage 2: cross-field checks over loaded columns
         schema_entries: list[Column] = []
@@ -881,7 +912,43 @@ class Schema(metaclass=SchemaMeta):
             )
         else:
             errs = F.col(_FIELD_ERRS)
-        return stage1.withColumn(_ERRS, F.coalesce(errs, F.col(_FIELD_ERRS)))
+
+        helper = (_ERRS, _FIELD_ERRS, _PID, _ROW_KEY, _MAL, _MALKEY)
+        out_cols = [
+            c
+            for c in loaded_names
+            if c not in helper
+            and not c.startswith(_ORIG)
+            and not c.startswith(_PRESENT)
+            and not c.startswith(_KIND)
+        ]
+        row_key = self.row_key or "row_id"
+        key = F.col(_ROW_KEY)
+        if _MALKEY in columns:
+            # malformed-JSON rows carry a recovered (or synthesized)
+            # key; well-formed rows keep the declared row key
+            key = F.coalesce(key, F.col(_MALKEY))
+        violations = (
+            F.size(_ERRS) > 0,
+            [
+                key.alias(row_key),
+                F.explode(_ERRS).alias("_e"),
+                F.col(_PID).alias("partition_id"),
+            ],
+            [
+                F.col(row_key),
+                F.col("_e.field").alias("field"),
+                F.col("_e.message").alias("message"),
+                F.col("partition_id"),
+            ],
+        )
+        return _Compiled(
+            stage1,
+            F.coalesce(errs, F.col(_FIELD_ERRS)),
+            out_cols,
+            row_key,
+            violations,
+        )
 
     # -- public entry points ----------------------------------------------
     def validate_df(
@@ -897,17 +964,10 @@ class Schema(metaclass=SchemaMeta):
         ``partial`` overrides the constructor setting for THIS call
         (parity: the reference's per-call partial resolution,
         src/marshmallow/schema.py:846-847)."""
-        if partial is not None:
-            saved, self.partial = self.partial, partial
-            try:
-                annotated = self.plan(df)
-            finally:
-                self.partial = saved
-        else:
-            annotated = self.plan(df)
-        return ValidationResult(
-            annotated, self, self.row_key if self.row_key else "row_id"
+        annotated, compiled = self._bind(
+            df, self.partial if partial is None else partial
         )
+        return ValidationResult(annotated, self, compiled)
 
     def load_df(
         self,

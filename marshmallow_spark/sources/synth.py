@@ -149,10 +149,14 @@ def synth_clips(
 
 
 def codecs_dim(spark: SparkSession) -> DataFrame:
-    """3-row codec dimension for broadcast referential joins (F1)."""
-    return spark.createDataFrame(
-        [("pcm16", 16, True), ("ulaw", 8, True), ("alaw", 8, True)],
-        "codec string, bits_per_sample int, lawful boolean",
+    """3-row codec dimension for broadcast referential joins (F1).
+
+    An inline ``VALUES`` table, so it plans as a LocalRelation: a
+    ``createDataFrame`` list is a scan of a Python RDD, which runs a
+    Python-worker task inside every query that joins it."""
+    return spark.sql(
+        "SELECT * FROM VALUES ('pcm16', 16, true), ('ulaw', 8, true), "
+        "('alaw', 8, true) AS codecs(codec, bits_per_sample, lawful)"
     )
 
 

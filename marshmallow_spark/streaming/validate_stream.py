@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.drift import _bin
 from ..schema import _ERRS
 
 
@@ -131,12 +132,8 @@ def windowed_psi(
     Matches operators/drift.py:psi semantics exactly; ``ref_probs``
     plays the expected side, the window plays the actual side."""
     nbins = len(ref_probs)
-    width = (hi - lo) / nbins
-    b = F.floor((F.col(value_col).try_cast("double") - F.lit(lo)) / F.lit(width))
-    b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1)).cast("int")
-    wm = sdf.where(F.col(value_col).isNotNull()).withWatermark(
-        time_col, watermark_delay
-    )
+    b = _bin(value_col, lo, hi, nbins)
+    wm = sdf.where(b.isNotNull()).withWatermark(time_col, watermark_delay)
     agg = wm.groupBy(F.window(time_col, window_duration).alias("window")).agg(
         F.count(F.lit(1)).alias("rows"),
         *[

@@ -144,3 +144,45 @@ def test_drift_has_one_fixed_bin_scaffold():
         ] == ["c0"]
         filters += attr == "filter" and isinstance(owner, ast.Name) and owner.id == "F"
     assert (floors, c0_aliases, filters) == (1, 1, 0)
+
+
+def test_empty_population_gives_null_measures(spark):
+    """Only group 1 present: every two-sample measure is NULL (an empty
+    population has no distribution), where a plain division by its zero
+    total failed the job with DIVIDE_BY_ZERO under ANSI."""
+    from marshmallow_spark.operators.drift import (
+        chi2_drift_df,
+        js_divergence_df,
+        ks_exact_df,
+        psi_df,
+        wasserstein1_df,
+    )
+
+    df = spark.createDataFrame([(1.0, "a", 1), (3.0, "b", 1)], "x double, c string, g int")
+    assert psi_df(df, "x", "g", 0.0, 4.0, 4).first()["psi"] is None
+    assert js_divergence_df(df, "x", "g", 0.0, 4.0, 4).first()["jsd"] is None
+    report = divergence_report(df, "x", "g", 0.0, 4.0, 4).first()
+    assert (report["psi"], report["chi2"], report["jsd"], report["dof"]) == (None, None, None, 1)
+    multi = divergence_report_multi(df, {"x": (0.0, 4.0)}, "g", 4).first()
+    assert (multi["psi"], multi["chi2"], multi["jsd"], multi["dof"]) == (None, None, None, 1)
+    assert ks_exact_df(df, "x", "g").first()["ks"] is None
+    assert wasserstein1_df(df, "x", "g").first()["w1"] is None
+    assert [tuple(r) for r in chi2_drift_df(df, "c", "g").collect()] == [
+        ("a", 0, 1, None),
+        ("b", 0, 1, None),
+    ]
+
+
+def test_non_numeric_values_drop_like_null(spark):
+    """A value that does not parse as a number bins as NULL and drops
+    out, as a NULL does: the string column's report equals the report
+    over the same rows with those values NULL."""
+    from marshmallow_spark.operators.drift import psi_df
+
+    rows = [("1.0", 0), ("abc", 0), ("2.5", 0), ("1.5", 1), ("x", 1), ("3.5", 1)]
+    text = spark.createDataFrame(rows, "v string, g int")
+    nulled = text.withColumn("v", F.col("v").try_cast("double"))
+    got = divergence_report(text, "v", "g", 0.0, 4.0, 4).first()
+    assert got == divergence_report(nulled, "v", "g", 0.0, 4.0, 4).first()
+    assert got["dof"] == 2
+    assert psi_df(text, "v", "g", 0.0, 4.0, 4).first()["psi"] == got["psi"]

@@ -116,6 +116,32 @@ def test_clips_structural_zero_shuffle_bytes_never_scanned(spark):
     assert "bytes" not in scans[0], scans[0]
 
 
+def test_clips_suite_codec_dimension_is_a_local_scan(spark):
+    """The codec dimension is an inline VALUES table: the suite's plan
+    scans no Python RDD (which ran a Python-worker task inside every
+    operation), and the referential anti-join broadcasts a
+    LocalTableScan."""
+    from marshmallow_spark.plans import ClipValidationSuite
+    from marshmallow_spark.sources.synth import codecs_dim, synth_clips
+
+    v, _ = ClipValidationSuite(codecs_dim(spark)).run(synth_clips(spark, 300), persist=False)
+    plan = final_plan(v)
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    lines = plan.splitlines()
+    anti = next(i for i, ln in enumerate(lines) if "LeftAnti" in ln)
+    bcast = next(i for i in range(anti, len(lines)) if "BroadcastExchange" in lines[i])
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    build_side = []
+    for ln in lines[bcast + 1 :]:
+        if depth(ln) <= depth(lines[bcast]):
+            break
+        build_side.append(ln)
+    assert any("LocalTableScan" in ln for ln in build_side), plan
+
+
 def test_q38_ivf_single_scan_reused_exchange(spark, sf_dir):
     """Same single-scan discipline as q32 for the IVF ANN path: one
     parquet scan, second self-join side fed by a ReusedExchange."""

@@ -229,6 +229,45 @@ def test_windowed_psi_matches_batch_psi(spark, stream_env):
     assert abs(got["psi"] - round(want, 6)) < 2e-6, (got["psi"], want)
 
 
+def test_windowed_psi_drops_non_numeric_like_batch(spark, tmp_path):
+    """A string column holding a non-numeric value: the batch operator
+    no longer fails the cast, and it and the windowed PSI both drop the
+    value like a NULL, so they agree. The batch reference population
+    has exactly the ``ref_probs`` bin shares."""
+    from marshmallow_spark.operators.drift import psi_df
+    from marshmallow_spark.streaming import windowed_psi
+
+    window = ["10", "abc", "70", "180", "120", "130"]
+    inp = str(tmp_path / "values")
+    spark.createDataFrame(
+        [(v, f"2024-01-01T00:00:{i:02d}") for i, v in enumerate(window)],
+        "v string, ts string",
+    ).write.parquet(inp)
+    ref_probs = [0.5, 0.25, 0.25, 0.0]
+    sdf = spark.readStream.schema("v string, ts string").parquet(inp).withColumn(
+        "ts", F.to_timestamp("ts")
+    )
+    q = (
+        windowed_psi(sdf, "v", "ts", ref_probs, 0.0, 200.0, window_duration="10 minutes")
+        .writeStream.format("memory")
+        .queryName("psi_text_windows")
+        .outputMode("complete")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.table("psi_text_windows").collect()
+    finally:
+        q.stop()
+    batch = spark.createDataFrame(
+        [(v, 0) for v in ("10", "20", "60", "110")] + [(v, 1) for v in window],
+        "v string, g int",
+    )
+    want = psi_df(batch, "v", "g", 0.0, 200.0, 4).first()["psi"]
+    assert len(rows) == 1 and rows[0]["rows"] == 5
+    assert abs(rows[0]["psi"] - want) < 2e-6, (rows[0]["psi"], want)
+
+
 def test_stream_audio_invariant_matches_batch(spark):
     """The Arrow-batched audio invariant runs unchanged on a file-source
     stream: the streamed violation set equals the batch pass exactly."""
